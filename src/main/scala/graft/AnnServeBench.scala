@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Throughput leg for the streaming ANN serving twin (r15):
@@ -19,15 +18,8 @@ object AnnServeBench {
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val nQueries = args.lift(1).map(_.toInt).getOrElse(2000)
     val nBatches = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-ann-serve-bench")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "false") // streaming side anyway
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-ann-serve-bench",
+      confs = Map("spark.sql.adaptive.enabled" -> "false")) // streaming side anyway
     import spark.implicits._
 
     val emb = Tables.load(spark, sfDir, "embeddings")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Builder-side diagnostic: attribute `DAGScheduler: Broadcasting large task
   * binary` warnings to the query that triggered them. Runs every registry
   * query at the given SF with a stderr marker before each, so the log4j WARN
@@ -16,14 +14,7 @@ object BinProbe {
     val only = args.drop(1).toSet
     // mirror Bench's session shape (the warnings being attributed occur
     // under ITS config — local thread count changes AQE's coalesced shapes)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-bin-probe")
     SparkEntry.queries
       .filter { case (n, _) => only.isEmpty || only(n) }
       .foreach { case (name, fn) =>

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Standalone capture of the [[Bench.canary]] box-drift workload: prints the
   * three run times and the min, for (re)calibrating Bench.CanaryBaselineMs
   * — run via tools/bench_java.sh on a QUIET box (loadavg < 0.3) only.
@@ -10,16 +8,7 @@ import org.apache.spark.sql.SparkSession
   */
 object BoxCanary {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-box-canary")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-box-canary")
     val times = (1 to 6).map(_ => Bench.canary(spark))
     println(s"[canary] runs_ms=${times.map(t => math.round(t * 1000)).mkString(",")} " +
       s"min_ms=${math.round(times.min * 1000)} baseline_ms=${Bench.CanaryBaselineMs} " +

@@ -1,20 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan of registered queries.
   * Usage: sbt "runMain graft.Explain q5_revenue_by_nation [more...]"
   * With no args, explains every headline query. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .appName("graft-explain")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-explain")
     val names = if (args.nonEmpty) args.toSeq else queries.Queries.headlines
     names.foreach { n =>
       println(s"\n========== $n ==========")

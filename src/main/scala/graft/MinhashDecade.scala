@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Text-side (MinHash) cluster decade (r12, verdict item 4): the embedding-
   * side LSH got band-local + a measured sf10 number in r11; this main
   * measures the SHINGLE-banded family at a given SF dir — the exact-
@@ -23,15 +21,7 @@ object MinhashDecade {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/sf10")
     val runs = sys.env.getOrElse("SPARK_GRAFT_SCALE_RUNS", "2").toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-minhash-decade")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-minhash-decade")
     Tables.load(spark, sfDir, "documents").count() // warm footers
 
     def time(tag: String)(body: => Unit): (String, Double) = {

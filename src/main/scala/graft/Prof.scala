@@ -1,15 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev profiler: 3 timed full-plan runs per named query at sf0.1.
   * Usage: sbt "runMain graft.Prof <query> [more...]" */
 object Prof {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions","32")
-      .config("spark.sql.adaptive.enabled","true")
-      .config("spark.ui.enabled","false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-prof")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // tolerate partial corpora (ScaleGen dirs carry only documents/
     // embeddings/events): warm what exists

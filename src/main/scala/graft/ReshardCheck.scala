@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Second measured decade (r10, verdict item 5): the r9 sf1 table showed
   * knn_label_consistency nearest to linear (8.85× at 10× data) because
   * within-list 1-NN pair work grows with list occupancy — (n/L)²·L at
@@ -17,15 +15,7 @@ object ReshardCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/sf10")
     val runs = sys.env.getOrElse("SPARK_GRAFT_SCALE_RUNS", "2").toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-reshard-check")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-reshard-check")
 
     val emb = Tables.load(spark, sfDir, "embeddings")
     val n = emb.count()

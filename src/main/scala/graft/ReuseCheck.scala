@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev diagnostic: executes named queries and reports how many parquet
   * scans, AQE ReusedExchange nodes, and shuffle stages the EXECUTED plan
@@ -9,11 +8,7 @@ import org.apache.spark.sql.SparkSession
   * Usage: sbt "runMain graft.ReuseCheck <query> [more...]" */
 object ReuseCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions","32")
-      .config("spark.sql.adaptive.enabled","true")
-      .config("spark.ui.enabled","false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-reuse-check")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     for (q <- args) {
       val df = SparkEntry.queries(q)(spark, dir)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Order-of-magnitude scale check (r9, verdict item 4): time the slow-tail
   * registry queries at a given SF dir — run it at /root/testdata/sf0.1 and
   * at the [[ScaleGen]]-built /tmp/sf1 and compare. Every 100 TB claim in
@@ -41,15 +39,7 @@ object ScaleCheck {
     val names: Seq[String] =
       if (args.length > 1) args.drop(1).toSeq else TailQueries
     val runs = sys.env.getOrElse("SPARK_GRAFT_SCALE_RUNS", "2").toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-scale-check")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-scale-check")
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** sf1 corpus generator for the order-of-magnitude scale check (r9,
@@ -27,14 +26,7 @@ object ScaleGen {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = if (args.length > 1) args(1) else "/tmp/sf1"
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "10").toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-scale-gen")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-scale-gen")
 
     val repCol = explode(array((0 until reps).map(lit(_)): _*)).as("rep")
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** The persisted-index re-shard measurement (r15): the served top-k's
   * BASELINE decade at the gate's fixed nlist = 16 shows serving growing
   * ×20 at ×100 data — an upper bound caused by fixed list occupancy
@@ -21,15 +19,7 @@ object ServedReshardCheck {
     val lists: Seq[Int] =
       if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(16, 64, 256)
     val runs = sys.env.getOrElse("SPARK_GRAFT_SCALE_RUNS", "2").toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-served-reshard")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-served-reshard")
     Tables.load(spark, sfDir, "embeddings").count() // warm footers
 
     val legs = lists.map { l =>

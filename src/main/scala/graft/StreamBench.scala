@@ -2,7 +2,6 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -32,17 +31,11 @@ object StreamBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stream-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
+    val cpus = Session.defaultCores
+    val spark = Session.local("graft-stream-bench", cpus,
       // bucketed-table leg target (in-memory catalog; keep it off the repo)
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      Map("spark.sql.warehouse.dir" ->
+        java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
 
     val cfg = BucketPriorityConfig("events",
       Seq("purchase", "signup", "error", "click"), Seq(40, 30, 20, 10)).toOption.get

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** A/B bench for the grouped top-k engine paths (r9, verdict item 5): the
@@ -21,15 +20,7 @@ object TopKBench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val nQueries = sys.env.getOrElse("SPARK_GRAFT_TOPK_QUERIES", "1000").toInt
     val k = 10
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-topk-bench")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-topk-bench")
 
     val emb = Tables.load(spark, sfDir, "embeddings")
     val q = emb.filter(col("vec_id") < nQueries)

@@ -1,6 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
+import graft.Session
 
 /** Fresh-JVM probe of `GraftExtensions`: `spark.sql.extensions` only applies
   * at context creation, so the shared test session can never cover it — this
@@ -10,14 +10,8 @@ import org.apache.spark.sql.SparkSession
   * mismatch. */
 object ExtensionsProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-extensions-probe")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-extensions-probe", cores = 2,
+      confs = Map("spark.sql.extensions" -> "graft.functions.GraftExtensions"))
     import spark.implicits._
 
     // injected SQL functions resolve and compute

@@ -3,8 +3,8 @@ package graft.examples
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
+import graft.Session
 import graft.core.BucketPriorityConfig
 import graft.streaming.PriorityStreams.PriorityPools
 
@@ -33,15 +33,9 @@ object FairShareDemo {
     val poolFile = PriorityPools.writeAllocationFile(
       cfg, System.getProperty("java.io.tmpdir"))
 
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("fair-share-demo")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.scheduler.allocation.file", poolFile.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("fair-share-demo", cores = 8, confs = Map(
+      "spark.scheduler.mode" -> "FAIR",
+      "spark.scheduler.allocation.file" -> poolFile.toString))
 
     val stageToPool = TrieMap.empty[Int, String]
     val poolTime = TrieMap.empty[String, Long]

@@ -1,8 +1,8 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Session
 import graft.Tables
 import graft.core.BucketPriorityConfig
 import graft.sql.BucketRouting
@@ -25,16 +25,9 @@ object PriorityPipelineDemo {
     val poolFile = PriorityStreams.PriorityPools.writeAllocationFile(
       cfg, System.getProperty("java.io.tmpdir"))
 
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("priority-pipeline-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.scheduler.allocation.file", poolFile.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("priority-pipeline-demo", cores = 4, confs = Map(
+      "spark.scheduler.mode" -> "FAIR",
+      "spark.scheduler.allocation.file" -> poolFile.toString))
 
     // ---- batch: deterministic routing + discard + accounting ----
     val ev = Tables.load(spark, sfDir, "events")

@@ -1,8 +1,9 @@
 package graft.examples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Session
 import graft.SparkEntry
 
 /** End-to-end training-data curation example: the §2.4 verbs chained the way
@@ -28,14 +29,7 @@ object TrainingDataPipelineDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
 
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("training-data-pipeline-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("training-data-pipeline-demo", cores = 4)
 
     def q(name: String): DataFrame = SparkEntry.queries(name)(spark, sfDir)
 

@@ -195,7 +195,7 @@ object Q {
     // checkpoint. The label sum is now observed ON the checkpoint action
     // itself (Dataset.observe + Observation; CollectMetricsExec aggregates
     // on the side of the materializing job, verified for localCheckpoint /
-    // reliable checkpoint / empty frames by graft.examples.ObserveProbe),
+    // reliable checkpoint / empty frames by CheckpointStatsSpec),
     // so each round is ONE job and the engine's most-reused iterative
     // primitive halves its barrier count at any scale. Labels are
     // bit-identical: the observed sum is the same exact decimal aggregate

@@ -50,7 +50,7 @@ object SimilarityQueries {
     * assumed). Returns (final edges, final edge count, rounds peeled,
     * converged). r16 (verdict item 4's pattern): the per-round edge count
     * is OBSERVED on the checkpoint action itself (Dataset.observe — the
-    * CC-loop mechanism, pinned by graft.examples.ObserveProbe) instead of
+    * CC-loop mechanism, pinned by CheckpointStatsSpec) instead of
     * a second count() job re-scanning the fresh checkpoint, so each round
     * is ONE driver-blocking job, not two. Counts are identical: the
     * metric counts the same rows the checkpoint writes. */
@@ -552,9 +552,10 @@ object SimilarityQueries {
     // (ScaleCheck), because fixed 6-bit buckets grow candidates with
     // occupancy SQUARED; band-local never materializes candidates and is
     // result-identical by the dedup_cosine_bandlocal spec pin — re-measured
-    // x5.5 after the cut, 30.5 s -> 12.1 s at sf1) → one degree agg → two degree-attach joins keyed
-    // on node id → 1-row moment roll-up. The signature cache follows the
-    // query-scoped cache contract (Queries scaladoc).
+    // x5.5 after the cut, 30.5 s -> 12.1 s at sf1) → the verified pairs
+    // materialized once → one degree agg → two degree-attach joins keyed
+    // on node id → 1-row moment roll-up. The signatures are unpersisted
+    // as soon as the pairs are materialized; nothing downstream reads them.
     "dup_graph_assortativity" -> Q(
       fn = (s, dir) => {
         val big = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")

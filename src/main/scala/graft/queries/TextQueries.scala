@@ -953,10 +953,14 @@ object TextQueries {
     "bm25_topk" -> Q(
       fn = (s, dir) => {
         import s.implicits._
-        val qterms = Seq(
+        // one (qid, term) list feeds both the broadcast query table and
+        // the per-doc term counters, so a term can't be in one only
+        val qdef = Seq(
           (1, "hash"), (1, "join"), (1, "merge"),
           (2, "window"), (2, "sort"), (2, "order"),
-          (3, "stream"), (3, "batch"), (3, "spark")).toDF("qid", "term")
+          (3, "stream"), (3, "batch"), (3, "spark"))
+        val qterms = qdef.toDF("qid", "term")
+        val qlist = qdef.map(_._2).distinct
         // r16 batch 3 (guide §2.3 "aggregate before you shuffle"): the old
         // (doc, term) agg fed dl (→ stats + the doc-length join) and tfq
         // (→ dfq + the scoring rows), re-running the corpus token explode
@@ -967,8 +971,6 @@ object TextQueries {
         // (doc, term, tf) rows come back via stack + tf > 0 (≡ the old
         // groupBy existence), df/stats re-aggregate the checkpoint, and the
         // corpus-sized dl join disappears outright (dl rides the row).
-        val qlist = Seq("hash", "join", "merge", "window", "sort", "order",
-          "stream", "batch", "spark")
         val per = Q.truncate(Tables.load(s, dir, "documents")
           .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
           .groupBy("doc_id")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions._
 
 /** Regression guard for the r11 doubly-exponential checkpoint-stats blow-up.
@@ -35,5 +36,40 @@ class CheckpointStatsSpec extends SparkTestBase {
       // planning (generous bound absorbs CI noise / job time on 200 rows)
       assert(secs < 30.0, s"round $round took ${secs}s — stats blow-up is back")
     }
+  }
+
+  // The CC and k-core loops piggyback their convergence sum on each round's
+  // checkpoint job through Dataset.observe, then read it with obs.get —
+  // which blocks until the metrics arrive. So an eager checkpoint must
+  // deliver them on both truncation paths (Q.truncate's localCheckpoint,
+  // and reliable checkpoint() when a checkpoint dir is set), and an empty
+  // frame must yield null rather than hang.
+  test("eager checkpoints deliver Observation metrics; an empty frame yields null") {
+    def observedSum(df: org.apache.spark.sql.DataFrame, col0: String)(
+        checkpoint: org.apache.spark.sql.DataFrame => Unit): Any = {
+      val obs = Observation()
+      checkpoint(df.observe(obs, sum(col(col0).cast("decimal(28,0)")).as("s")))
+      obs.get("s")
+    }
+    val grouped = spark.range(0, 1000).toDF("id")
+      .groupBy((col("id") % 7).as("k"))
+      .agg(sum(col("id")).cast("decimal(28,0)").as("label"))
+    assert(String.valueOf(observedSum(grouped, "label")(_.localCheckpoint(true))) == "499500")
+
+    val empty = spark.range(0, 10).toDF("id").filter(col("id") < 0)
+    assert(observedSum(empty, "id")(_.localCheckpoint(true)) == null)
+
+    val ckptDir = java.nio.file.Files.createTempDirectory("graft-observe-ckpt").toString
+    spark.sparkContext.setCheckpointDir(ckptDir)
+    try {
+      val got = observedSum(spark.range(0, 100).toDF("id"), "id")(_.checkpoint(true))
+      assert(String.valueOf(got) == "4950")
+    } finally {
+      // Option(null) -> None: restores the localCheckpoint path for the
+      // shared session
+      spark.sparkContext.setCheckpointDir(null)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckptDir))
+    }
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One lazily-created local session shared across a suite. */
@@ -25,20 +27,24 @@ trait SparkTestBase extends AnyFunSuite {
   def withRocksDB[T](body: => T): T =
     withConfs("spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
+
+  /** Every file scan in an executed plan, walking through AQE's adaptive
+    * and query-stage wrappers (a plan that shuffles hides its scans
+    * behind them). */
+  def fileScans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+    case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan)
+    case q: QueryStageExec        => fileScans(q.plan)
+    case s: FileSourceScanExec    => Seq(s)
+    case other                    => other.children.flatMap(fileScans)
+  }
+
+  /** How many scans of the `documents` table the executed plan carries. */
+  def docScanCount(qe: QueryExecution): Int = fileScans(qe.executedPlan)
+    .count(_.relation.location.rootPaths.exists(_.toString.contains("documents")))
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = Session.local("graft-tests", cores = 4,
+    confs = Map("spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
 }

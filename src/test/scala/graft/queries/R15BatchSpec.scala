@@ -43,16 +43,6 @@ class R15BatchSpec extends SparkTestBase {
     val df = graft.SparkEntry.queries("ivf_pq_served_topk")(spark, dir)
     val qe = df.queryExecution
     qe.toRdd.count()
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    // the plan shuffles, so AQE wraps every stage — walk through the
-    // adaptive wrappers to reach the physical scans
-    def fileScans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan)
-      case q: QueryStageExec        => fileScans(q.plan)
-      case s: FileSourceScanExec    => Seq(s)
-      case other                    => other.children.flatMap(fileScans)
-    }
     val scans = fileScans(qe.executedPlan).filter { s =>
       s.relation.location.rootPaths.exists(_.toString.contains("graft-ann-index")) &&
         s.relation.location.rootPaths.exists(_.toString.contains("codes"))

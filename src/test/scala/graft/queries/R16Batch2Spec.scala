@@ -65,19 +65,6 @@ class R16Batch2Spec extends SparkTestBase {
     assert(oldTot == newTot, s"total mass must match: $oldTot vs $newTot")
   }
 
-  private def docScanCount(qe: org.apache.spark.sql.execution.QueryExecution): Int = {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def fileScans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan)
-      case q: QueryStageExec        => fileScans(q.plan)
-      case s: FileSourceScanExec    => Seq(s)
-      case other                    => other.children.flatMap(fileScans)
-    }
-    fileScans(qe.executedPlan)
-      .count(_.relation.location.rootPaths.exists(_.toString.contains("documents")))
-  }
-
   test("dup_ngram_ratio: ONE documents scan (window shares the gh exchange)") {
     val qe = graft.SparkEntry.queries("dup_ngram_ratio")(spark, dir).queryExecution
     qe.toRdd.count()

@@ -106,19 +106,6 @@ class R16Batch3Spec extends SparkTestBase {
       "window context totals must equal the joined-back aggregation")
   }
 
-  private def docScanCount(qe: org.apache.spark.sql.execution.QueryExecution): Int = {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def fileScans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan)
-      case q: QueryStageExec        => fileScans(q.plan)
-      case s: FileSourceScanExec    => Seq(s)
-      case other                    => other.children.flatMap(fileScans)
-    }
-    fileScans(qe.executedPlan)
-      .count(_.relation.location.rootPaths.exists(_.toString.contains("documents")))
-  }
-
   test("batch-3 final plans read checkpoints, not the corpus") {
     for (q <- Seq("burrows_delta", "kn_bigram_ppl", "bigram_logprob", "bm25_topk")) {
       val qe = graft.SparkEntry.queries(q)(spark, dir).queryExecution

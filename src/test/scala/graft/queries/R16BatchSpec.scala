@@ -127,14 +127,6 @@ class R16BatchSpec extends SparkTestBase {
   test("dedup_chunk_overlap: ONE documents scan (window shares the chunk_hash exchange)") {
     val qe = graft.SparkEntry.queries("dedup_chunk_overlap")(spark, dir).queryExecution
     qe.toRdd.count()
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def fileScans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan)
-      case q: QueryStageExec        => fileScans(q.plan)
-      case s: FileSourceScanExec    => Seq(s)
-      case other                    => other.children.flatMap(fileScans)
-    }
     val docScans = fileScans(qe.executedPlan)
       .filter(_.relation.location.rootPaths.exists(_.toString.contains("documents")))
     assert(docScans.size == 1,
