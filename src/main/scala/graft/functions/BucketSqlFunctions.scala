@@ -7,12 +7,10 @@ import graft.core.BucketPriorityConfig
 
 /** §2.5: expose the bucket operators on the SQL surface.
   *
-  * `bucket_of` is the same split+trim+isin expression tree as
-  * [[graft.sql.BucketRouting.bucketOf]], built from catalyst nodes directly:
-  * a function-registry lambda must return an evaluable tree, and Column→
-  * Expression bridging yields a lazily-converted node the analyzer won't
-  * revisit inside a registered function. Equivalence of the two forms is
-  * asserted by VectorFunctionsSpec.
+  * `bucket_of` is built from catalyst nodes directly because a
+  * function-registry lambda must return an evaluable tree;
+  * [[graft.sql.BucketRouting.bucketOf]] wraps the same [[bucketOfExpr]] as
+  * a Column, so the SQL and DataFrame surfaces share one expression.
   */
 object BucketSqlFunctions {
 

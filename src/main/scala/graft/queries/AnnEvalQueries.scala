@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.VectorFunctions.cosineSimilarity
 import graft.queries.AnnQueries._
-import graft.queries.SimilarityQueries.{duckDot, duckL2Full}
+import graft.queries.SimilarityQueries.{duckDot, duckL2Double, duckL2Full}
 
 /** SURVEY §2.4 ANN QUALITY EVALS + the OPQ rotation study, split from
   * [[AnnQueries]] (r15 — the retriever file had grown past review size
@@ -18,10 +18,6 @@ import graft.queries.SimilarityQueries.{duckDot, duckL2Full}
   * composition discipline is unchanged by the file split.
   */
 object AnnEvalQueries {
-
-  /** Lineage truncation — see [[Q.truncate]]. */
-  private def truncate(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    Q.truncate(df)
 
   // ------------------------------------------------------------------
   // OPQ-lite rotation (r15, VERDICT item 4; Ge, He, Ke & Sun 2013).
@@ -191,33 +187,11 @@ object AnnEvalQueries {
   val all: Map[String, Q] = Map(
   "recall_at_k" -> Q(
     fn = (s, dir) => {
-      val exact = base("similarity_topk").fn(s, dir).select(col("qid"), col("cid"))
-      def leg(name: String) = {
-        val approx = base(name).fn(s, dir)
-          .select(col("qid"), col("cid"), lit(1L).as("hit"))
-        exact.join(approx, Seq("qid", "cid"), "left")
-          .groupBy("qid")
-          .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
-          .select(lit(name).as("method"), col("qid"), col("n_hit"),
-            (col("n_hit").cast("double") / lit(TopK)).as("recall"))
-      }
-      leg("ivf_topk").unionAll(leg("lsh_topk")).orderBy("method", "qid")
+      recallAtK(base("similarity_topk").fn(s, dir).select(col("qid"), col("cid")),
+        Seq("ivf_topk", "lsh_topk").map(name => name -> base(name).fn(s, dir)))
     },
-    oracle = Some {
-      def leg(name: String) =
-        s"""SELECT '$name' AS method, e.qid,
-           |       CAST(SUM(CASE WHEN a.cid IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit
-           |FROM exact e LEFT JOIN a_$name a ON e.qid = a.qid AND e.cid = a.cid
-           |GROUP BY e.qid""".stripMargin
-      s"""WITH exact AS (${base("similarity_topk").oracle.get}),
-         |a_ivf_topk AS (${base("ivf_topk").oracle.get}),
-         |a_lsh_topk AS (${base("lsh_topk").oracle.get}),
-         |r AS (${leg("ivf_topk")}
-         |UNION ALL
-         |${leg("lsh_topk")})
-         |SELECT method, qid, n_hit, CAST(n_hit AS DOUBLE) / $TopK AS recall
-         |FROM r ORDER BY method, qid""".stripMargin
-    }),
+    oracle = Some(recallAtKSql(
+      Seq("ivf_topk", "lsh_topk").map(name => name -> base(name).oracle.get)))),
 
   // ---- recall@10 across the PQ serving family (added r13) ---------------
   // The eval row the two-stage refine exists for: recall@10 of pq_topk
@@ -256,52 +230,22 @@ object AnnEvalQueries {
         pqResidualSubFrom(ivfLists(emb), ivfCentroids(emb))))
       val lists = listsFull.select(col("cid"), col("list_id"))
       val probes = ivfProbes(emb)
-      def leg(name: String, approx0: org.apache.spark.sql.DataFrame) = {
-        val approx = approx0.select(col("qid"), col("cid"), lit(1L).as("hit"))
-        exact.join(approx, Seq("qid", "cid"), "left")
-          .groupBy("qid")
-          .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
-          .select(lit(name).as("method"), col("qid"), col("n_hit"),
-            (col("n_hit").cast("double") / lit(TopK)).as("recall"))
-      }
       // thunks, not pre-built frames: ivfPqResidualDistFrom runs its
       // codebook-training truncate EAGERLY at call time, so only a thunk
       // lets that training overlap the raw-ADC dist checkpoint
       val Seq(dist, rdist) = Q.par[org.apache.spark.sql.DataFrame](
         () => Q.truncate(ivfPqAdcDistFrom(emb, lists, probes)),
         () => Q.truncate(ivfPqResidualDistFrom(emb, rsub, lists, probes)))
-      leg("pq_topk", base("pq_topk").fn(s, dir))
-        .unionAll(leg("ivf_pq_topk", ivfPqRankTopk(dist)))
-        .unionAll(leg("ivf_pq_refined_topk", ivfPqRefineTopk(s, dir, dist)))
-        .unionAll(leg("ivf_pq_residual_topk", ivfPqRankTopk(rdist)))
-        .unionAll(leg("ivf_pq_residual_refined_topk",
-          ivfPqRefineTopk(s, dir, rdist)))
-        .orderBy("method", "qid")
+      recallAtK(exact, Seq(
+        "pq_topk" -> base("pq_topk").fn(s, dir),
+        "ivf_pq_topk" -> ivfPqRankTopk(dist),
+        "ivf_pq_refined_topk" -> ivfPqRefineTopk(s, dir, dist),
+        "ivf_pq_residual_topk" -> ivfPqRankTopk(rdist),
+        "ivf_pq_residual_refined_topk" -> ivfPqRefineTopk(s, dir, rdist)))
     },
-    oracle = Some {
-      def leg(name: String) =
-        s"""SELECT '$name' AS method, e.qid,
-           |       CAST(SUM(CASE WHEN a.cid IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit
-           |FROM exact e LEFT JOIN a_$name a ON e.qid = a.qid AND e.cid = a.cid
-           |GROUP BY e.qid""".stripMargin
-      s"""WITH exact AS (${base("similarity_topk").oracle.get}),
-         |a_pq_topk AS (${base("pq_topk").oracle.get}),
-         |a_ivf_pq_topk AS (${base("ivf_pq_topk").oracle.get}),
-         |a_ivf_pq_refined_topk AS (${base("ivf_pq_refined_topk").oracle.get}),
-         |a_ivf_pq_residual_topk AS (${base("ivf_pq_residual_topk").oracle.get}),
-         |a_ivf_pq_residual_refined_topk AS (${base("ivf_pq_residual_refined_topk").oracle.get}),
-         |r AS (${leg("pq_topk")}
-         |UNION ALL
-         |${leg("ivf_pq_topk")}
-         |UNION ALL
-         |${leg("ivf_pq_refined_topk")}
-         |UNION ALL
-         |${leg("ivf_pq_residual_topk")}
-         |UNION ALL
-         |${leg("ivf_pq_residual_refined_topk")})
-         |SELECT method, qid, n_hit, CAST(n_hit AS DOUBLE) / $TopK AS recall
-         |FROM r ORDER BY method, qid""".stripMargin
-    }),
+    oracle = Some(recallAtKSql(
+      Seq("pq_topk", "ivf_pq_topk", "ivf_pq_refined_topk", "ivf_pq_residual_topk",
+        "ivf_pq_residual_refined_topk").map(name => name -> base(name).oracle.get)))),
 
   // ---- seed-coarse vs trained-coarse IVF recall (r14) --------------------
   // The eval the two trained-coarse retrievers exist for: recall@10 of
@@ -334,15 +278,6 @@ object AnnEvalQueries {
       // each consumer's scan pipeline. So withN stays lazy, exactly like
       // the registry entry.
       val emb = Tables.load(s, dir, "embeddings")
-      def leg(name: String, approx0: org.apache.spark.sql.DataFrame,
-          exact: org.apache.spark.sql.DataFrame) = {
-        val approx = approx0.select(col("qid"), col("cid"), lit(1L).as("hit"))
-        exact.join(approx, Seq("qid", "cid"), "left")
-          .groupBy("qid")
-          .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
-          .select(lit(name).as("method"), col("qid"), col("n_hit"),
-            (col("n_hit").cast("double") / lit(TopK)).as("recall"))
-      }
       val withN = normalizedEmb(emb)
       // r15 (guide §2.6): the truth pass and the two independent trainings
       // used to checkpoint strictly serially — three action barriers, most
@@ -354,31 +289,16 @@ object AnnEvalQueries {
         TrainQueries.kmeansTrainLoop(
           withN.select(col("vec_id"), col("nv").as("embedding")),
           spherical = true)._1))
-      leg("ivf_topk", base("ivf_topk").fn(s, dir), exact)
-        .unionAll(leg("ivf_trained_topk", ivfL2ServeFrom(emb, centsL2), exact))
-        .unionAll(leg("ivf_spherical_topk", ivfL2ServeAssignFrom(
+      recallAtK(exact, Seq(
+        "ivf_topk" -> base("ivf_topk").fn(s, dir),
+        "ivf_trained_topk" -> ivfL2ServeFrom(emb, centsL2),
+        "ivf_spherical_topk" -> ivfL2ServeAssignFrom(
           withN.select(col("vec_id"), col("embedding"), col("nv").as("assignv")),
-          centsS), exact))
-        .orderBy("method", "qid")
+          centsS)))
     },
-    oracle = Some {
-      def leg(name: String) =
-        s"""SELECT '$name' AS method, e.qid,
-           |       CAST(SUM(CASE WHEN a.cid IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit
-           |FROM exact e LEFT JOIN a_$name a ON e.qid = a.qid AND e.cid = a.cid
-           |GROUP BY e.qid""".stripMargin
-      s"""WITH exact AS (${base("similarity_topk").oracle.get}),
-         |a_ivf_topk AS (${base("ivf_topk").oracle.get}),
-         |a_ivf_trained_topk AS (${base("ivf_trained_topk").oracle.get}),
-         |a_ivf_spherical_topk AS (${base("ivf_spherical_topk").oracle.get}),
-         |r AS (${leg("ivf_topk")}
-         |UNION ALL
-         |${leg("ivf_trained_topk")}
-         |UNION ALL
-         |${leg("ivf_spherical_topk")})
-         |SELECT method, qid, n_hit, CAST(n_hit AS DOUBLE) / $TopK AS recall
-         |FROM r ORDER BY method, qid""".stripMargin
-    }),
+    oracle = Some(recallAtKSql(
+      Seq("ivf_topk", "ivf_trained_topk", "ivf_spherical_topk")
+        .map(name => name -> base(name).oracle.get)))),
 
   // ---- ANN quality eval #2: mean reciprocal rank ------------------------
   // recall_at_k's order-blind companion asks "how MUCH of the truth came
@@ -802,31 +722,15 @@ object AnnEvalQueries {
             col("max_d2").cast("double").as("max_d2"))
           .orderBy("subspace")
       },
-      oracle = Some {
-        def duckL2(a: String, b: String) =
-          s"""list_reduce(list_transform(range(1, 9),
-             |  i -> (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE)) * (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE))),
-             |  (acc, v) -> acc + v)""".stripMargin
-        s"""WITH js AS (SELECT UNNEST(range(8)) AS j),
-           |cents AS (SELECT vec_id AS cent_id, j, embedding[j*8+1 : j*8+8] AS centv
-           |          FROM embeddings, js WHERE vec_id < 16),
-           |vecs AS (SELECT vec_id AS cid, j, embedding[j*8+1 : j*8+8] AS subv
-           |         FROM embeddings, js),
-           |enc AS (
-           |  SELECT cid, j, d2 FROM (
-           |    SELECT v.cid, v.j, ${duckL2("v.subv", "c.centv")} AS d2,
-           |           ROW_NUMBER() OVER (PARTITION BY v.cid, v.j
-           |                              ORDER BY ${duckL2("v.subv", "c.centv")}, c.cent_id) AS crk
-           |    FROM vecs v JOIN cents c ON v.j = c.j) t
-           |  WHERE crk = 1),
+      oracle = Some(
+        s"""WITH $pqRawEncodeSqlCtes,
            |g AS (SELECT j, CAST(floor(d2 * 1000000.0) / 1000000.0 AS DECIMAL(16,6)) AS d2
-           |      FROM enc)
+           |      FROM rawenc)
            |SELECT CAST(j AS BIGINT) AS subspace, CAST(COUNT(*) AS BIGINT) AS n_vecs,
            |       CAST(SUM(d2) AS DOUBLE) AS total_d2,
            |       CAST(SUM(d2) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS mean_d2,
            |       CAST(MAX(d2) AS DOUBLE) AS max_d2
-           |FROM g GROUP BY j ORDER BY subspace""".stripMargin
-      }),
+           |FROM g GROUP BY j ORDER BY subspace""".stripMargin)),
 
     // ---- trained-vs-raw PQ distortion (r14, VERDICT item 1's measure) ----
     // The number pq_train exists to move: per subspace, mean/max squared
@@ -898,70 +802,30 @@ object AnnEvalQueries {
           .orderBy("method", "subspace")
       },
       oracle = Some {
-        def duckL2F(a: String, b: String) =
-          s"""list_reduce(list_transform(range(1, 9),
-             |  i -> (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE)) * (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE))),
-             |  (acc, v) -> acc + v)""".stripMargin
+        // each trained method's encode: every slice of `src` to its nearest
+        // codeword of `cb`, keeping the squared error
+        def resEnc(src: String, cb: String) =
+          s"""SELECT cid, j, d2 FROM (
+             |    SELECT r.cid, r.j, ${duckL2Double("r.rsub", "c.centv")} AS d2,
+             |           ROW_NUMBER() OVER (PARTITION BY r.cid, r.j
+             |                              ORDER BY ${duckL2Double("r.rsub", "c.centv")}, c.code) AS crk
+             |    FROM $src r JOIN $cb c ON r.j = c.j) t
+             |  WHERE crk = 1""".stripMargin
+        val u = Seq(
+          "raw_pq" -> "SELECT cid, j, d2 FROM rawenc",
+          "residual_init" -> resEnc("rsub", "cb0"),
+          "residual_pq" -> resEnc("rsub", s"cb$PqTrainRounds"),
+          "plain_trained" -> resEnc("prsub", s"pcb$PqTrainRounds"),
+          "opq_trained" -> resEnc("orsub", s"ocb$PqTrainRounds")
+        ).map { case (method, enc) =>
+          s"""SELECT '$method' AS method, j,
+             |       CAST(floor(d2 * 1000000.0) / 1000000.0 AS DECIMAL(16,6)) AS d2
+             |FROM ($enc)""".stripMargin
+        }.mkString("\nUNION ALL\n")
         s"""WITH $pqResidualTrainSql,
            |$opqSqlCtes,
-           |rawcents AS (SELECT vec_id AS cent_id, j, embedding[j*8+1 : j*8+8] AS centv
-           |             FROM embeddings, js WHERE vec_id < 16),
-           |rawvecs AS (SELECT vec_id AS cid, j, embedding[j*8+1 : j*8+8] AS subv
-           |            FROM embeddings, js),
-           |rawenc AS (
-           |  SELECT cid, j, d2 FROM (
-           |    SELECT v.cid, v.j, ${duckL2F("v.subv", "c.centv")} AS d2,
-           |           ROW_NUMBER() OVER (PARTITION BY v.cid, v.j
-           |                              ORDER BY ${duckL2F("v.subv", "c.centv")}, c.cent_id) AS crk
-           |    FROM rawvecs v JOIN rawcents c ON v.j = c.j) t
-           |  WHERE crk = 1),
-           |resenc AS (
-           |  SELECT cid, j, d2 FROM (
-           |    SELECT r.cid, r.j, ${duckL2Res("r.rsub", "c.centv")} AS d2,
-           |           ROW_NUMBER() OVER (PARTITION BY r.cid, r.j
-           |                              ORDER BY ${duckL2Res("r.rsub", "c.centv")}, c.code) AS crk
-           |    FROM rsub r JOIN cb$PqTrainRounds c ON r.j = c.j) t
-           |  WHERE crk = 1),
-           |resenc0 AS (
-           |  SELECT cid, j, d2 FROM (
-           |    SELECT r.cid, r.j, ${duckL2Res("r.rsub", "c.centv")} AS d2,
-           |           ROW_NUMBER() OVER (PARTITION BY r.cid, r.j
-           |                              ORDER BY ${duckL2Res("r.rsub", "c.centv")}, c.code) AS crk
-           |    FROM rsub r JOIN cb0 c ON r.j = c.j) t
-           |  WHERE crk = 1),
-           |presenc AS (
-           |  SELECT cid, j, d2 FROM (
-           |    SELECT r.cid, r.j, ${duckL2Res("r.rsub", "c.centv")} AS d2,
-           |           ROW_NUMBER() OVER (PARTITION BY r.cid, r.j
-           |                              ORDER BY ${duckL2Res("r.rsub", "c.centv")}, c.code) AS crk
-           |    FROM prsub r JOIN pcb$PqTrainRounds c ON r.j = c.j) t
-           |  WHERE crk = 1),
-           |oresenc AS (
-           |  SELECT cid, j, d2 FROM (
-           |    SELECT r.cid, r.j, ${duckL2Res("r.rsub", "c.centv")} AS d2,
-           |           ROW_NUMBER() OVER (PARTITION BY r.cid, r.j
-           |                              ORDER BY ${duckL2Res("r.rsub", "c.centv")}, c.code) AS crk
-           |    FROM orsub r JOIN ocb$PqTrainRounds c ON r.j = c.j) t
-           |  WHERE crk = 1),
-           |u AS (SELECT 'raw_pq' AS method, j,
-           |             CAST(floor(d2 * 1000000.0) / 1000000.0 AS DECIMAL(16,6)) AS d2
-           |      FROM rawenc
-           |      UNION ALL
-           |      SELECT 'residual_init' AS method, j,
-           |             CAST(floor(d2 * 1000000.0) / 1000000.0 AS DECIMAL(16,6)) AS d2
-           |      FROM resenc0
-           |      UNION ALL
-           |      SELECT 'residual_pq' AS method, j,
-           |             CAST(floor(d2 * 1000000.0) / 1000000.0 AS DECIMAL(16,6)) AS d2
-           |      FROM resenc
-           |      UNION ALL
-           |      SELECT 'plain_trained' AS method, j,
-           |             CAST(floor(d2 * 1000000.0) / 1000000.0 AS DECIMAL(16,6)) AS d2
-           |      FROM presenc
-           |      UNION ALL
-           |      SELECT 'opq_trained' AS method, j,
-           |             CAST(floor(d2 * 1000000.0) / 1000000.0 AS DECIMAL(16,6)) AS d2
-           |      FROM oresenc)
+           |$pqRawEncodeSqlCtes,
+           |u AS ($u)
            |SELECT method, CAST(j AS BIGINT) AS subspace,
            |       CAST(COUNT(*) AS BIGINT) AS n_vecs,
            |       CAST(SUM(d2) AS DOUBLE) AS total_d2,

@@ -371,10 +371,10 @@ object AnnIndexQueries {
           |resenc AS (
           |  SELECT cid, j, d2 FROM (
           |    SELECT r.cid, r.j,
-          |           CAST(floor((${AnnQueries.duckL2Res("r.rsub", "c.centv")}) * 1000000.0)
+          |           CAST(floor((${SimilarityQueries.duckL2Double("r.rsub", "c.centv")}) * 1000000.0)
           |                / 1000000.0 AS DECIMAL(16,6)) AS d2,
           |           ROW_NUMBER() OVER (PARTITION BY r.cid, r.j
-          |                              ORDER BY ${AnnQueries.duckL2Res("r.rsub", "c.centv")}, c.code) AS crk
+          |                              ORDER BY ${SimilarityQueries.duckL2Double("r.rsub", "c.centv")}, c.code) AS crk
           |    FROM rsub r JOIN cb${AnnQueries.PqTrainRounds} c ON r.j = c.j) t
           |  WHERE crk = 1),
           |pv AS (
@@ -434,33 +434,12 @@ object AnnIndexQueries {
             emb.select(col("vec_id"), col("embedding")))._1,
           TrainQueries.kmeansTrainLoop(
             emb.filter(sampledPredicate).select(col("vec_id"), col("embedding")))._1))
-        def leg(name: String, approx0: org.apache.spark.sql.DataFrame) = {
-          val approx = approx0.select(col("qid"), col("cid"), lit(1L).as("hit"))
-          exact.join(approx, Seq("qid", "cid"), "left")
-            .groupBy("qid")
-            .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
-            .select(lit(name).as("method"), col("qid"), col("n_hit"),
-              (col("n_hit").cast("double") / lit(AnnQueries.TopK)).as("recall"))
-        }
-        leg("ivf_trained_topk", AnnQueries.ivfL2ServeFrom(emb, centsFull))
-          .unionAll(leg("ivf_sampled_topk",
-            AnnQueries.ivfL2ServeFrom(emb, centsSampled)))
-          .orderBy("method", "qid")
+        AnnQueries.recallAtK(exact, Seq(
+          "ivf_trained_topk" -> AnnQueries.ivfL2ServeFrom(emb, centsFull),
+          "ivf_sampled_topk" -> AnnQueries.ivfL2ServeFrom(emb, centsSampled)))
       },
-      oracle = Some {
-        def leg(name: String) =
-          s"""SELECT '$name' AS method, e.qid,
-             |       CAST(SUM(CASE WHEN a.cid IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit
-             |FROM exact e LEFT JOIN a_$name a ON e.qid = a.qid AND e.cid = a.cid
-             |GROUP BY e.qid""".stripMargin
-        s"""WITH exact AS (${AnnQueries.base("similarity_topk").oracle.get}),
-           |a_ivf_trained_topk AS (${AnnQueries.base("ivf_trained_topk").oracle.get}),
-           |a_ivf_sampled_topk AS ($sampledTopkSql),
-           |r AS (${leg("ivf_trained_topk")}
-           |UNION ALL
-           |${leg("ivf_sampled_topk")})
-           |SELECT method, qid, n_hit, CAST(n_hit AS DOUBLE) / ${AnnQueries.TopK} AS recall
-           |FROM r ORDER BY method, qid""".stripMargin
-      })
+      oracle = Some(AnnQueries.recallAtKSql(Seq(
+        "ivf_trained_topk" -> AnnQueries.base("ivf_trained_topk").oracle.get,
+        "ivf_sampled_topk" -> sampledTopkSql))))
   )
 }

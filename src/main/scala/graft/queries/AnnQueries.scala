@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.VectorFunctions.cosineSimilarity
-import graft.queries.SimilarityQueries.{duckDot, duckL2Full, duckQuantizedCtes, hyperplaneSig, hyperplaneSigSql8, norm2, quantized}
+import graft.queries.SimilarityQueries.{duckDot, duckL2Double, duckL2Full, duckQuantizedCtes, hyperplaneSig, hyperplaneSigSql8, norm2, quantized}
 
 /** SURVEY §2.4 ANN retrieval, quantization serving, and their quality
   * evals, split out of [[SimilarityQueries]] (r15 — that file had grown to
@@ -22,10 +22,6 @@ import graft.queries.SimilarityQueries.{duckDot, duckL2Full, duckQuantizedCtes, 
   * ADC = broadcast table-lookup join, never all-pairs.
   */
 object AnnQueries {
-
-  /** Lineage truncation — see [[Q.truncate]]. */
-  private def truncate(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    Q.truncate(df)
 
   private[queries] val NumQueries = 5
   private[queries] val TopK = 10
@@ -220,31 +216,11 @@ object AnnQueries {
       lists: org.apache.spark.sql.DataFrame,
       probes: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    def l2(a: String, b: String): Column =
-      graft.functions.VectorFunctions.floatL2Sq(col(a), col(b))
-    def subspaces(src: org.apache.spark.sql.DataFrame, idCol: String, subName: String) =
-      src.select(col("vec_id").as(idCol),
-          explode(sequence(lit(0), lit(7))).as("j"), col("embedding"))
-        .select(col(idCol), col("j"),
-          expr("slice(embedding, int(j * 8 + 1), 8)").as(subName))
-    // PQ side: codes + ADC table (pq_topk's spelling). r15: the encode
-    // argmin is the map-only VectorArgmin against the 8-row per-subspace
-    // collected codebook (see ivfListsN's optimization note) — the corpus
-    // shuffle of the old groupBy(cid, j) min(struct) is gone; the argmin
-    // bits are unchanged (same floatL2Sq fold, same (d2, cent_id) order).
-    val pqcents = subspaces(emb.filter(col("vec_id") < 16), "cent_id", "centv")
-    val pqcands = pqcents.groupBy("j")
-      .agg(sort_array(collect_list(struct(
-        col("cent_id").cast("long").as("id"), col("centv")))).as("cands"))
-    val codes = subspaces(emb, "cid", "subv")
-      .join(broadcast(pqcands), Seq("j"))
-      .select(col("cid"), col("j"),
-        graft.functions.VectorFunctions.argminL2(col("cands"), col("subv")).as("m"))
+    // PQ side: pq_topk's codes + ADC table
+    val codes = pqRawEncode(emb)
+      .select(col("cid"), col("j"), pqRawArgmin.as("m"))
       .select(col("cid"), col("j"), col("m.id").as("code"))
-    val adc = subspaces(emb.filter(col("vec_id") < NumQueries), "qid", "qsubv")
-      .join(broadcast(pqcents), Seq("j"))
-      .select(col("qid"), col("j"), col("cent_id").as("code"),
-        Q.grid6(l2("qsubv", "centv")).cast("decimal(16,6)").as("qd2"))
+    val adc = pqRawAdc(emb)
     // probe-pruned candidates ranked by ADC
     val cand = probes.join(lists, Seq("list_id"))
       .filter(col("qid") =!= col("cid"))
@@ -302,11 +278,7 @@ object AnnQueries {
 
   /** Oracle twin of [[ivfPqAdcDist]] — CTE text ending in `dist(qid, cid,
     * adist)`, nested by ivf_pq_topk and ivf_pq_refined_topk. */
-  private def ivfPqDistSql: String = {
-    def duckL2(a: String, b: String) =
-      s"""list_reduce(list_transform(range(1, 9),
-         |  i -> (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE)) * (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE))),
-         |  (acc, v) -> acc + v)""".stripMargin
+  private def ivfPqDistSql: String =
     s"""$ivfListsSql,
        |probes AS (
        |  SELECT qid, cent_id AS list_id FROM (
@@ -314,32 +286,44 @@ object AnnQueries {
        |           ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY ${duckCosSql("q.embedding", "c.centv")} DESC, c.cent_id) AS prk
        |    FROM embeddings q CROSS JOIN cents c WHERE q.vec_id < $NumQueries) t
        |  WHERE prk <= 4),
-       |js AS (SELECT UNNEST(range(8)) AS j),
-       |pqcents AS (SELECT vec_id AS cent_id, j, embedding[j*8+1 : j*8+8] AS centv
-       |            FROM embeddings, js WHERE vec_id < 16),
-       |vecs AS (SELECT vec_id AS cid, j, embedding[j*8+1 : j*8+8] AS subv
-       |         FROM embeddings, js),
-       |pqcodes AS (
-       |  SELECT cid, j, cent_id AS code FROM (
-       |    SELECT v.cid, v.j, c.cent_id,
-       |           ROW_NUMBER() OVER (PARTITION BY v.cid, v.j
-       |                              ORDER BY ${duckL2("v.subv", "c.centv")}, c.cent_id) AS crk
-       |    FROM vecs v JOIN pqcents c ON v.j = c.j) t
-       |  WHERE crk = 1),
-       |pqadc AS (
-       |  SELECT q.cid AS qid, q.j, c.cent_id AS code,
-       |         CAST(floor((${duckL2("q.subv", "c.centv")}) * 1000000.0) / 1000000.0
-       |              AS DECIMAL(16,6)) AS qd2
-       |  FROM vecs q JOIN pqcents c ON q.j = c.j WHERE q.cid < $NumQueries),
+       |$pqRawAdcSqlCtes,
        |cand AS (
        |  SELECT p.qid, l.cid FROM probes p JOIN lists l ON p.list_id = l.list_id
        |  WHERE p.qid != l.cid),
        |dist AS (
        |  SELECT d.qid, d.cid, SUM(a.qd2) AS adist
-       |  FROM cand d JOIN pqcodes k ON k.cid = d.cid
-       |  JOIN pqadc a ON a.qid = d.qid AND a.j = k.j AND a.code = k.code
+       |  FROM cand d JOIN rawenc k ON k.cid = d.cid
+       |  JOIN rawadc a ON a.qid = d.qid AND a.j = k.j AND a.code = k.code
        |  GROUP BY d.qid, d.cid)""".stripMargin
-  }
+
+  /** Oracle twin of [[pqRawEncode]] — CTE text ending in `rawenc(cid, j,
+    * code, d2)`: every vector's subspace slices (`rawvecs`) assigned to the
+    * nearest entry of the first-16 codebook (`rawcents`), ties broken by
+    * (d2, cent_id) like the Spark argmin. Own CTE names, so it nests beside
+    * [[ivfListsSql]]'s `cents` and [[pqResidualTrainSql]]'s `js`. */
+  private[queries] val pqRawEncodeSqlCtes: String =
+    s"""rawjs AS (SELECT UNNEST(range(8)) AS j),
+       |rawcents AS (SELECT vec_id AS cent_id, j, embedding[j*8+1 : j*8+8] AS centv
+       |             FROM embeddings, rawjs WHERE vec_id < 16),
+       |rawvecs AS (SELECT vec_id AS cid, j, embedding[j*8+1 : j*8+8] AS subv
+       |            FROM embeddings, rawjs),
+       |rawenc AS (
+       |  SELECT cid, j, code, d2 FROM (
+       |    SELECT v.cid, v.j, c.cent_id AS code, ${duckL2Full("v.subv", "c.centv")} AS d2,
+       |           ROW_NUMBER() OVER (PARTITION BY v.cid, v.j
+       |                              ORDER BY ${duckL2Full("v.subv", "c.centv")}, c.cent_id) AS crk
+       |    FROM rawvecs v JOIN rawcents c ON v.j = c.j) t
+       |  WHERE crk = 1)""".stripMargin
+
+  /** [[pqRawEncodeSqlCtes]] plus `rawadc(qid, j, code, qd2)` — oracle twin
+    * of [[pqRawAdc]]. */
+  private val pqRawAdcSqlCtes: String =
+    s"""$pqRawEncodeSqlCtes,
+       |rawadc AS (
+       |  SELECT q.cid AS qid, q.j, c.cent_id AS code,
+       |         CAST(floor((${duckL2Full("q.subv", "c.centv")}) * 1000000.0) / 1000000.0
+       |              AS DECIMAL(16,6)) AS qd2
+       |  FROM rawvecs q JOIN rawcents c ON q.j = c.j WHERE q.cid < $NumQueries)""".stripMargin
 
   // ------------------------------------------------------------------
   // Trained residual PQ — the real IVFADC (r14, VERDICT item 1).
@@ -405,7 +389,7 @@ object AnnQueries {
     * is pq_code_usage's codes_used column. */
   private def pqResidualTrain(s: org.apache.spark.sql.SparkSession, dir: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
-    pqResidualTrainFrom(truncate(pqResidualSub(s, dir)))
+    pqResidualTrainFrom(Q.truncate(pqResidualSub(s, dir)))
 
   /** Init codebook: residual slices of vec_id 16..31 (see
     * [[pqResidualTrainFrom]]'s doc for why not 0..15). */
@@ -458,13 +442,6 @@ object AnnQueries {
     (cb, update)
   }
 
-  /** 8-dim L2² over already-double sublists — the oracle spelling of the
-    * codegen'd VectorL2Sq fold on residual slices. */
-  private[queries] def duckL2Res(a: String, b: String) =
-    s"""list_reduce(list_transform(range(1, 9),
-       |  i -> ($a[i] - $b[i]) * ($a[i] - $b[i])),
-       |  (acc, v) -> acc + v)""".stripMargin
-
   /** Oracle twin of [[pqResidualSub]] + [[pqResidualTrain]] — CTE text
     * from `cents`/`lists` (nests [[ivfListsSql]]) through the trained
     * codebook `cb$PqTrainRounds` and final update `u$PqTrainRounds`.
@@ -482,7 +459,7 @@ object AnnQueries {
          |  SELECT cid, j, code, rsub FROM (
          |    SELECT r.cid, r.j, c.code, r.rsub,
          |           ROW_NUMBER() OVER (PARTITION BY r.cid, r.j
-         |                              ORDER BY ${duckL2Res("r.rsub", "c.centv")}, c.code) AS rk
+         |                              ORDER BY ${duckL2Double("r.rsub", "c.centv")}, c.code) AS rk
          |    FROM ${p}rsub r JOIN ${p}cb${k - 1} c ON r.j = c.j) t
          |  WHERE rk = 1),
          |${p}u$k AS MATERIALIZED (
@@ -526,7 +503,7 @@ object AnnQueries {
   private def ivfPqResidualDist(s: org.apache.spark.sql.SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame = {
     val emb = Tables.load(s, dir, "embeddings")
-    ivfPqResidualDistFrom(emb, truncate(pqResidualSub(s, dir)),
+    ivfPqResidualDistFrom(emb, Q.truncate(pqResidualSub(s, dir)),
       ivfLists(emb).select("cid", "list_id"), ivfProbes(emb))
   }
 
@@ -552,7 +529,7 @@ object AnnQueries {
       lists: org.apache.spark.sql.DataFrame,
       probes: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val cb = truncate(pqResidualTrainFrom(rsub)._1)
+    val cb = Q.truncate(pqResidualTrainFrom(rsub)._1)
     val codes = pqResidualCodesFrom(rsub, cb)
     val cents = ivfCentroids(emb)
     val q = emb.filter(col("vec_id") < NumQueries)
@@ -602,7 +579,7 @@ object AnnQueries {
        |  SELECT cid, j, code FROM (
        |    SELECT r.cid, r.j, c.code,
        |           ROW_NUMBER() OVER (PARTITION BY r.cid, r.j
-       |                              ORDER BY ${duckL2Res("r.rsub", "c.centv")}, c.code) AS rk
+       |                              ORDER BY ${duckL2Double("r.rsub", "c.centv")}, c.code) AS rk
        |    FROM rsub r JOIN cb$PqTrainRounds c ON r.j = c.j) t
        |  WHERE rk = 1),
        |probes AS (
@@ -621,7 +598,7 @@ object AnnQueries {
        |  JOIN cents c ON c.cent_id = p.list_id, js),
        |adc AS (
        |  SELECT r.qid, r.list_id, r.j, c.code,
-       |         CAST(floor((${duckL2Res("r.qrsub", "c.centv")}) * 1000000.0) / 1000000.0
+       |         CAST(floor((${duckL2Double("r.qrsub", "c.centv")}) * 1000000.0) / 1000000.0
        |              AS DECIMAL(16,6)) AS qd2
        |  FROM qrsub r JOIN cb$PqTrainRounds c ON r.j = c.j),
        |cand AS (
@@ -640,25 +617,56 @@ object AnnQueries {
     * first-16 codebooks, gridded. Extracted r14 so pq_distortion and
     * pq_train_distortion's raw leg provably measure the same encoder. */
   private[queries] def pqRawErrs(s: org.apache.spark.sql.SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame = {
-    val emb = Tables.load(s, dir, "embeddings")
-    def l2(a: String, b: String): Column =
-      graft.functions.VectorFunctions.floatL2Sq(col(a), col(b))
-    def subspaces(src: org.apache.spark.sql.DataFrame, idCol: String, subName: String) =
-      src.select(col("vec_id").as(idCol),
-          explode(sequence(lit(0), lit(7))).as("j"), col("embedding"))
-        .select(col(idCol), col("j"),
-          expr("slice(embedding, int(j * 8 + 1), 8)").as(subName))
-    val cands = subspaces(emb.filter(col("vec_id") < 16), "cent_id", "centv")
-      .groupBy("j")
-      .agg(sort_array(collect_list(struct(
-        col("cent_id").cast("long").as("id"), col("centv")))).as("cands"))
-    subspaces(emb, "cid", "subv")
-      .join(broadcast(cands), Seq("j"))
+      : org.apache.spark.sql.DataFrame =
+    pqRawEncode(Tables.load(s, dir, "embeddings"))
       .select(col("j"),
-        Q.grid6(graft.functions.VectorFunctions.argminL2(col("cands"), col("subv"))
-          .getField("score")).cast("decimal(16,6)").as("d2"))
-  }
+        Q.grid6(pqRawArgmin.getField("score")).cast("decimal(16,6)").as("d2"))
+
+  /** Raw-PQ subspace slices (idCol, j, subName): each vector of `src` cut
+    * into the 8 consecutive 8-dim subspaces, one row per (vector, j). */
+  private def pqSubspaces(src: org.apache.spark.sql.DataFrame, idCol: String,
+      subName: String): org.apache.spark.sql.DataFrame =
+    src.select(col("vec_id").as(idCol),
+        explode(sequence(lit(0), lit(7))).as("j"), col("embedding"))
+      .select(col(idCol), col("j"),
+        expr("slice(embedding, int(j * 8 + 1), 8)").as(subName))
+
+  /** The untrained raw-PQ codebook (code, j, centv): the first 16 vectors'
+    * subspace slices. */
+  private def pqRawCodebook(emb: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    pqSubspaces(emb.filter(col("vec_id") < 16), "code", "centv")
+
+  /** The raw-PQ ENCODE stage (cid, j, subv, cands): every subspace slice
+    * beside the 8-row collected [[pqRawCodebook]] ([[cbCands]]), for
+    * [[pqRawArgmin]] to pick its code. r15: the argmin is the map-only
+    * VectorArgmin (see ivfListsN's optimization note) — the corpus never
+    * shuffles, and the (d2, code) tie-break equals the oracle's
+    * ROW_NUMBER. Shared by pq_topk, ivf_pq_topk, pq_code_usage and the raw
+    * distortion audits, so all of them measure one encoder. Callers
+    * project the argmin themselves, so each keeps its own plan shape. */
+  private[queries] def pqRawEncode(emb: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    pqSubspaces(emb, "cid", "subv")
+      .join(broadcast(cbCands(pqRawCodebook(emb))), Seq("j"))
+
+  /** The argmin struct (id = code, score = d2) over [[pqRawEncode]]'s
+    * columns. */
+  private def pqRawArgmin: Column =
+    graft.functions.VectorFunctions.argminL2(col("cands"), col("subv"))
+
+  /** The raw-PQ ADC table (qid, j, code, qd2): each query's subspace slices
+    * against every codeword of [[pqRawCodebook]] — the codegen'd
+    * FloatVectorL2Sq fold (r5: bit-identical to the HOF
+    * `aggregate(zip_with(...))` form, one tight loop), rounded onto the
+    * 6 dp grid as exact DECIMAL so the 8-subspace sum is order-free. */
+  private def pqRawAdc(emb: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    pqSubspaces(emb.filter(col("vec_id") < NumQueries), "qid", "qsubv")
+      .join(broadcast(pqRawCodebook(emb)), Seq("j"))
+      .select(col("qid"), col("j"), col("code"),
+        Q.grid6(graft.functions.VectorFunctions.floatL2Sq(col("qsubv"), col("centv")))
+          .cast("decimal(16,6)").as("qd2"))
 
 
   /** Exact integer dot product of two int8 code vectors (≤ 127²·64 < 2^20,
@@ -739,22 +747,18 @@ object AnnQueries {
     * vectors (the sampled retriever trains on a sample but serves the full
     * corpus). */
   private[queries] def ivfL2ServeTailSql(assignCte: String): String = {
-    def l2d(a: String, b: String) =
-      s"""list_reduce(list_transform(range(1, 65),
-         |  i -> ($a[i] - $b[i]) * ($a[i] - $b[i])),
-         |  (acc, v) -> acc + v)""".stripMargin
     s"""tl AS (
        |  SELECT cid, cent_id AS list_id FROM (
        |    SELECT e.vec_id AS cid, c.cent_id,
        |           ROW_NUMBER() OVER (PARTITION BY e.vec_id
-       |                              ORDER BY ${l2d("e.emb", "c.centv")}, c.cent_id) AS rk
+       |                              ORDER BY ${duckL2Double("e.emb", "c.centv")}, c.cent_id) AS rk
        |    FROM $assignCte e CROSS JOIN c3 c) t
        |  WHERE rk = 1),
        |tprobes AS (
        |  SELECT qid, cent_id AS list_id FROM (
        |    SELECT q.vec_id AS qid, c.cent_id,
        |           ROW_NUMBER() OVER (PARTITION BY q.vec_id
-       |                              ORDER BY ${l2d("q.emb", "c.centv")}, c.cent_id) AS prk
+       |                              ORDER BY ${duckL2Double("q.emb", "c.centv")}, c.cent_id) AS prk
        |    FROM $assignCte q CROSS JOIN c3 c WHERE q.vec_id < $NumQueries) t
        |  WHERE prk <= 4),
        |tscored AS (
@@ -769,6 +773,38 @@ object AnnQueries {
        |SELECT qid, cid, floor(sim * 1000000.0) / 1000000.0 AS sim,
        |       CAST(rk AS INTEGER) AS rk
        |FROM tranked WHERE rk <= $TopK ORDER BY qid, rk""".stripMargin
+  }
+
+  /** The recall@[[TopK]] table (method, qid, n_hit, recall) shared by the
+    * recall evals: per (method, approx) leg, how many of each query's
+    * brute-force truth rows `exact(qid, cid)` the retriever returns. */
+  private[queries] def recallAtK(exact: org.apache.spark.sql.DataFrame,
+      legs: Seq[(String, org.apache.spark.sql.DataFrame)])
+      : org.apache.spark.sql.DataFrame =
+    legs.map { case (name, approx0) =>
+      val approx = approx0.select(col("qid"), col("cid"), lit(1L).as("hit"))
+      exact.join(approx, Seq("qid", "cid"), "left")
+        .groupBy("qid")
+        .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
+        .select(lit(name).as("method"), col("qid"), col("n_hit"),
+          (col("n_hit").cast("double") / lit(TopK)).as("recall"))
+    }.reduce(_.unionAll(_)).orderBy("method", "qid")
+
+  /** Oracle twin of [[recallAtK]]: similarity_topk's SQL as `exact` and
+    * each (method, retriever SQL) leg as `a_<method>`, nested as CTEs. */
+  private[queries] def recallAtKSql(legs: Seq[(String, String)]): String = {
+    val approx = legs.map { case (name, sql) => s"a_$name AS ($sql)" }
+    val hits = legs.map { case (name, _) =>
+      s"""SELECT '$name' AS method, e.qid,
+         |       CAST(SUM(CASE WHEN a.cid IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit
+         |FROM exact e LEFT JOIN a_$name a ON e.qid = a.qid AND e.cid = a.cid
+         |GROUP BY e.qid""".stripMargin
+    }
+    s"""WITH exact AS (${base("similarity_topk").oracle.get}),
+       |${approx.mkString(",\n")},
+       |r AS (${hits.mkString("\nUNION ALL\n")})
+       |SELECT method, qid, n_hit, CAST(n_hit AS DOUBLE) / $TopK AS recall
+       |FROM r ORDER BY method, qid""".stripMargin
   }
 
   /** Every retriever entry except the composed evals below. */
@@ -883,23 +919,8 @@ object AnnQueries {
     // code histogram agg and an 8-row roll-up — constant beyond the scan.
     "pq_code_usage" -> Q(
       fn = (s, dir) => {
-        val emb = Tables.load(s, dir, "embeddings")
-        def l2(a: String, b: String): Column =
-          graft.functions.VectorFunctions.floatL2Sq(col(a), col(b))
-        def subspaces(src: org.apache.spark.sql.DataFrame, idCol: String, subName: String) =
-          src.select(col("vec_id").as(idCol),
-              explode(sequence(lit(0), lit(7))).as("j"), col("embedding"))
-            .select(col(idCol), col("j"),
-              expr("slice(embedding, int(j * 8 + 1), 8)").as(subName))
-        val cands = subspaces(emb.filter(col("vec_id") < 16), "cent_id", "centv")
-          .groupBy("j")
-          .agg(sort_array(collect_list(struct(
-            col("cent_id").cast("long").as("id"), col("centv")))).as("cands"))
-        val codes = subspaces(emb, "cid", "subv")
-          .join(broadcast(cands), Seq("j"))
-          .select(col("j"),
-            graft.functions.VectorFunctions.argminL2(col("cands"), col("subv"))
-              .getField("id").as("code"))
+        val codes = pqRawEncode(Tables.load(s, dir, "embeddings"))
+          .select(col("j"), pqRawArgmin.getField("id").as("code"))
         val hist = codes.groupBy("j", "code").agg(count(lit(1)).as("c"))
         hist.groupBy("j")
           .agg(sum(col("c")).as("n"), count(lit(1)).as("codes_used"),
@@ -911,24 +932,9 @@ object AnnQueries {
                 / (col("n") * (col("n") - 1)).cast("double")).as("concentration"))
           .orderBy("subspace")
       },
-      oracle = Some {
-        def duckL2(a: String, b: String) =
-          s"""list_reduce(list_transform(range(1, 9),
-             |  i -> (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE)) * (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE))),
-             |  (acc, v) -> acc + v)""".stripMargin
-        s"""WITH js AS (SELECT UNNEST(range(8)) AS j),
-           |cents AS (SELECT vec_id AS cent_id, j, embedding[j*8+1 : j*8+8] AS centv
-           |          FROM embeddings, js WHERE vec_id < 16),
-           |vecs AS (SELECT vec_id AS cid, j, embedding[j*8+1 : j*8+8] AS subv
-           |         FROM embeddings, js),
-           |enc AS (
-           |  SELECT cid, j, cent_id AS code FROM (
-           |    SELECT v.cid, v.j, c.cent_id,
-           |           ROW_NUMBER() OVER (PARTITION BY v.cid, v.j
-           |                              ORDER BY ${duckL2("v.subv", "c.centv")}, c.cent_id) AS crk
-           |    FROM vecs v JOIN cents c ON v.j = c.j) t
-           |  WHERE crk = 1),
-           |h AS (SELECT j, code, CAST(COUNT(*) AS BIGINT) AS c FROM enc GROUP BY j, code),
+      oracle = Some(
+        s"""WITH $pqRawEncodeSqlCtes,
+           |h AS (SELECT j, code, CAST(COUNT(*) AS BIGINT) AS c FROM rawenc GROUP BY j, code),
            |m AS (SELECT j, CAST(SUM(c) AS BIGINT) AS n, CAST(COUNT(*) AS BIGINT) AS codes_used,
            |             CAST(MAX(c) AS BIGINT) AS top_c, CAST(SUM(c * c) AS BIGINT) AS sc2
            |      FROM h GROUP BY j)
@@ -937,7 +943,7 @@ object AnnQueries {
            |       CASE WHEN n <= 1 THEN NULL
            |            ELSE CAST(sc2 - n AS DOUBLE) / CAST(n * (n - 1) AS DOUBLE)
            |       END AS concentration
-           |FROM m ORDER BY subspace""".stripMargin }),
+           |FROM m ORDER BY subspace""".stripMargin)),
 
     // ---- brute-force cosine top-k ---------------------------------------
     "similarity_topk" -> Q(
@@ -1471,38 +1477,9 @@ object AnnQueries {
     "pq_topk" -> Q(
       fn = (s, dir) => {
         val emb = Tables.load(s, dir, "embeddings")
-        // codegen'd FloatVectorL2Sq (r5): same zero-seeded left fold as the
-        // HOF `aggregate(zip_with(...))` form — bit-identical, but one tight
-        // loop instead of m·k = 128 interpreted lambda folds per encoded
-        // vector (the dominant per-row encode cost)
-        def l2(a: String, b: String): Column =
-          graft.functions.VectorFunctions.floatL2Sq(col(a), col(b))
-        def subspaces(src: org.apache.spark.sql.DataFrame, idCol: String, subName: String) =
-          src.select(col("vec_id").as(idCol),
-              explode(sequence(lit(0), lit(7))).as("j"), col("embedding"))
-            .select(col(idCol), col("j"),
-              expr("slice(embedding, int(j * 8 + 1), 8)").as(subName))
-        val cents = subspaces(emb.filter(col("vec_id") < 16), "cent_id", "centv")
-        // encode: nearest codebook entry per (vector, subspace). r15: the
-        // argmin is the map-only VectorArgmin against the 8-row collected
-        // per-subspace codebook (was: min(struct) aggregate — which already
-        // collapsed the 16× product map-side, but still shuffled one row
-        // per (vec, subspace) through a Sort+Exchange+SortAggregate pair;
-        // now the corpus never shuffles at all — guide §2.4). Identical
-        // (d2 asc, cent_id asc) tie-break as the oracle's ROW_NUMBER.
-        val codes = subspaces(emb, "cid", "subv")
-          .join(broadcast(cents.groupBy("j")
-            .agg(sort_array(collect_list(struct(
-              col("cent_id").cast("long").as("id"), col("centv")))).as("cands"))),
-            Seq("j"))
-          .select(col("cid"), col("j"),
-            graft.functions.VectorFunctions.argminL2(col("cands"), col("subv"))
-              .getField("id").as("code"))
-        // ADC table: query × subspace × codebook entry, rounded + exact-sum
-        val adc = subspaces(emb.filter(col("vec_id") < NumQueries), "qid", "qsubv")
-          .join(broadcast(cents), Seq("j"))
-          .select(col("qid"), col("j"), col("cent_id").as("code"),
-            Q.grid6(l2("qsubv", "centv")).cast("decimal(16,6)").as("qd2"))
+        val codes = pqRawEncode(emb)
+          .select(col("cid"), col("j"), pqRawArgmin.getField("id").as("code"))
+        val adc = pqRawAdc(emb)
         val dist = codes.join(broadcast(adc), Seq("j", "code"))
           .filter(col("qid") =!= col("cid"))
           .groupBy("qid", "cid").agg(sum(col("qd2")).as("adist"))
@@ -1514,39 +1491,18 @@ object AnnQueries {
             col("adist").cast("double").as("adist"), col("rk"))
           .orderBy("qid", "rk")
       },
-      oracle = Some {
-        def duckL2(a: String, b: String) =
-          s"""list_reduce(list_transform(range(1, 9),
-             |  i -> (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE)) * (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE))),
-             |  (acc, v) -> acc + v)""".stripMargin
-        s"""WITH js AS (SELECT UNNEST(range(8)) AS j),
-           |cents AS (SELECT vec_id AS cent_id, j, embedding[j*8+1 : j*8+8] AS centv
-           |          FROM embeddings, js WHERE vec_id < 16),
-           |vecs AS (SELECT vec_id AS cid, j, embedding[j*8+1 : j*8+8] AS subv
-           |         FROM embeddings, js),
-           |codes AS (
-           |  SELECT cid, j, cent_id AS code FROM (
-           |    SELECT v.cid, v.j, c.cent_id,
-           |           ROW_NUMBER() OVER (PARTITION BY v.cid, v.j
-           |                              ORDER BY ${duckL2("v.subv", "c.centv")}, c.cent_id) AS crk
-           |    FROM vecs v JOIN cents c ON v.j = c.j) t
-           |  WHERE crk = 1),
-           |adc AS (
-           |  SELECT q.cid AS qid, q.j, c.cent_id AS code,
-           |         CAST(floor((${duckL2("q.subv", "c.centv")}) * 1000000.0) / 1000000.0
-           |              AS DECIMAL(16,6)) AS qd2
-           |  FROM vecs q JOIN cents c ON q.j = c.j WHERE q.cid < $NumQueries),
+      oracle = Some(
+        s"""WITH $pqRawAdcSqlCtes,
            |dist AS (
            |  SELECT qid, cid, SUM(qd2) AS adist
-           |  FROM codes JOIN adc USING (j, code)
+           |  FROM rawenc JOIN rawadc USING (j, code)
            |  WHERE qid != cid GROUP BY qid, cid),
            |ranked AS (
            |  SELECT qid, cid, adist,
            |         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adist, cid) AS rk
            |  FROM dist)
            |SELECT qid, cid, CAST(adist AS DOUBLE) AS adist, CAST(rk AS INTEGER) AS rk
-           |FROM ranked WHERE rk <= $TopK ORDER BY qid, rk""".stripMargin
-      }),
+           |FROM ranked WHERE rk <= $TopK ORDER BY qid, rk""".stripMargin)),
 
     // ---- ANN over the int8 codes (quantized search + exact parity) -------
     // Search on the COMPRESSED vectors: cosine over int8 codes, where the
@@ -1786,7 +1742,7 @@ object AnnQueries {
     "ivf_trained_topk" -> Q(
       fn = (s, dir) => {
         val emb = Tables.load(s, dir, "embeddings")
-        val cents = truncate(
+        val cents = Q.truncate(
           TrainQueries.kmeansTrainLoop(emb.select(col("vec_id"), col("embedding")))._1)
         ivfL2ServeFrom(emb, cents)
       },
@@ -1810,7 +1766,7 @@ object AnnQueries {
     "ivf_spherical_topk" -> Q(
       fn = (s, dir) => {
         val withN = normalizedEmb(Tables.load(s, dir, "embeddings"))
-        val cents = truncate(TrainQueries.kmeansTrainLoop(
+        val cents = Q.truncate(TrainQueries.kmeansTrainLoop(
           withN.select(col("vec_id"), col("nv").as("embedding")),
           spherical = true)._1)
         ivfL2ServeAssignFrom(

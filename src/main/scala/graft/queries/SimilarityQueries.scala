@@ -36,12 +36,14 @@ object SimilarityQueries {
   private[queries] def duckL2Full(a: String, b: String) =
     s"list_reduce(list_transform(range(1, len($a) + 1), i -> (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE)) * (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE))), (acc, v) -> acc + v)"
 
+  /** [[duckL2Full]] over already-double lists — the oracle spelling of the
+    * codegen'd VectorL2Sq fold, shared by the residual-PQ slice encoders
+    * and the k-means / trained-IVF assignments. */
+  private[queries] def duckL2Double(a: String, b: String) =
+    s"""list_reduce(list_transform(range(1, len($a) + 1),
+       |  i -> ($a[i] - $b[i]) * ($a[i] - $b[i])),
+       |  (acc, v) -> acc + v)""".stripMargin
 
-  /** Lineage truncation for the CC loop — see [[Q.truncate]]: reliable
-    * `checkpoint()` when a checkpoint dir is configured (cluster
-    * fault-tolerance), `localCheckpoint` otherwise (local-mode speed). */
-  private def truncate(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    Q.truncate(df)
 
   /** The bounded k-core peel (dup_graph_kcore's loop, factored r14):
     * repeatedly drop nodes with degree < k from the undirected pair
@@ -69,7 +71,7 @@ object SimilarityQueries {
       val keep = sym.groupBy("a_id").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("a_id").as("id"))
       val obs = org.apache.spark.sql.Observation()
-      edges = truncate(edges
+      edges = Q.truncate(edges
         .join(keep.select(col("id").as("a_id")), Seq("a_id"), "left_semi")
         .join(keep.select(col("id").as("b_id")), Seq("b_id"), "left_semi")
         .select(col("a_id"), col("b_id"))
@@ -720,7 +722,7 @@ object SimilarityQueries {
         // r16: the initial edge count rides the truncate action (observe)
         // instead of a second count() job over the fresh checkpoint
         val obs0 = org.apache.spark.sql.Observation()
-        val edges0 = truncate(pairsRaw.select(col("a_id"), col("b_id"))
+        val edges0 = Q.truncate(pairsRaw.select(col("a_id"), col("b_id"))
           .observe(obs0, count(lit(1)).as("n")))
         sig.unpersist()
         val nEdges0 = obs0.get("n").asInstanceOf[Long]
@@ -1025,19 +1027,14 @@ object SimilarityQueries {
           .agg(count(lit(1)).as("n_near"), Q.grid6(max(col("sim"))).as("max_sim"))
           .orderBy("cluster", "removed_id")
       },
-      oracle = Some {
-        val l2 =
-          """list_reduce(list_transform(range(1, 65),
-            |  i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(c.centv[i] AS DOUBLE))
-            |     * (CAST(e.embedding[i] AS DOUBLE) - CAST(c.centv[i] AS DOUBLE))),
-            |  (acc, v) -> acc + v)""".stripMargin
+      oracle = Some(
         s"""WITH cents AS (SELECT vec_id AS cent_id, embedding AS centv
            |               FROM embeddings WHERE vec_id < 16),
            |assigned AS (
            |  SELECT vec_id, embedding, cluster FROM (
            |    SELECT e.vec_id, e.embedding, c.cent_id AS cluster,
            |           ROW_NUMBER() OVER (PARTITION BY e.vec_id
-           |                              ORDER BY $l2, c.cent_id) AS rk
+           |                              ORDER BY ${duckL2Full("e.embedding", "c.centv")}, c.cent_id) AS rk
            |    FROM embeddings e CROSS JOIN cents c) t
            |  WHERE rk = 1),
            |pairs AS (
@@ -1050,8 +1047,7 @@ object SimilarityQueries {
            |SELECT cluster, b_id AS removed_id, COUNT(*) AS n_near,
            |       floor(MAX(sim) * 1000000.0) / 1000000.0 AS max_sim
            |FROM pairs WHERE sim >= 0.35
-           |GROUP BY cluster, b_id ORDER BY cluster, removed_id""".stripMargin
-      }),
+           |GROUP BY cluster, b_id ORDER BY cluster, removed_id""".stripMargin)),
 
     // ---- k-center coreset selection: greedy farthest-point (added r8) ----
     // The data-pruning / active-learning coreset primitive (Gonzalez 1985

@@ -436,39 +436,51 @@ object TextQueries {
        |fp AS (SELECT doc_id, $bits AS simhash FROM h GROUP BY doc_id)""".stripMargin
   }
 
-  /** DuckDB CTE chain (for a `WITH RECURSIVE` prefix) ending in
-    * `lab(doc_id, cluster)` — the recursive-CTE transitive closure over the
-    * verified MinHash near-dup pair set, shared by the dedup_minhash_clusters
-    * and dup_cluster_profile oracles (oracle-side twin of
-    * [[minhashPairsWithHandle]] + [[Q.connectedComponents]]). */
-  /** DuckDB CTE chain ending in `pairs(a_id, b_id)` — the oracle-side twin
-    * of [[minhashPairsWithHandle]], factored (r8) so the cluster closure
-    * and split_leakage oracles provably band identically. */
-  private val minhashPairsSqlCtes: String = {
+  /** DuckDB CTEs `sh → sig → bands(doc_id, band, bk)` over the caller's
+    * `t(doc_id, toks, …)` — the oracle-side twin of [[bandedSignatures]]'s
+    * [[bandKeysCol]]: one row per (doc, band), `band` the band index and
+    * `bk` its md5 band key. */
+  private val minhashBandsSqlCtes: String = {
     val sigs = (0 until NumHashes).map(k =>
       s"list_min(list_transform(shingles, s -> substring(md5(s), ${4 * k + 1}, 4))) AS sig$k").mkString(",\n       ")
     val bandSelects = (0 until NumHashes / BandSize).map(b =>
-      s"SELECT doc_id, md5('$b' || '|' || sig${2 * b} || '|' || sig${2 * b + 1}) AS bk FROM sig")
+      s"SELECT doc_id, $b AS band, md5('$b' || '|' || sig${2 * b} || '|' || sig${2 * b + 1}) AS bk FROM sig")
       .mkString("\n  UNION ALL\n  ")
-    s"""t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-       |sh AS (SELECT doc_id, $shinglesSqlDuck AS shingles FROM t WHERE len(toks) >= 3),
+    s"""sh AS (SELECT doc_id, $shinglesSqlDuck AS shingles FROM t WHERE len(toks) >= 3),
        |sig AS (SELECT doc_id, shingles,
        |       $sigs
        |FROM sh),
        |bands AS (
        |  $bandSelects
-       |),
+       |)""".stripMargin
+  }
+
+  /** [[minhashBandsSqlCtes]] over the whole corpus, ending in
+    * `cand(a_id, b_id)` — the distinct banded candidate pairs. */
+  private val minhashCandSqlCtes: String =
+    s"""t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+       |$minhashBandsSqlCtes,
        |cand AS (
        |  SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id
        |  FROM bands x JOIN bands y ON x.bk = y.bk AND x.doc_id < y.doc_id
-       |),
+       |)""".stripMargin
+
+  /** DuckDB CTE chain ending in `pairs(a_id, b_id)` — the oracle-side twin
+    * of [[minhashPairsWithHandle]], factored (r8) so the cluster closure
+    * and split_leakage oracles provably band identically. */
+  private val minhashPairsSqlCtes: String =
+    s"""$minhashCandSqlCtes,
        |pairs AS (
        |  SELECT a_id, b_id FROM cand
        |  JOIN sh a ON a.doc_id = a_id JOIN sh b ON b.doc_id = b_id
        |  WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
        |         / len(list_distinct(a.shingles || b.shingles)) >= 0.5)""".stripMargin
-  }
 
+  /** DuckDB CTE chain (for a `WITH RECURSIVE` prefix) ending in
+    * `lab(doc_id, cluster)` — the recursive-CTE transitive closure over the
+    * verified MinHash near-dup pair set, shared by the dedup_minhash_clusters,
+    * dup_cluster_profile and dedup_survivorship oracles (oracle-side twin of
+    * [[minhashPairsWithHandle]] + [[Q.connectedComponents]]). */
   private val minhashClusterSqlCtes: String = {
     s"""$minhashPairsSqlCtes,
        |sym AS (SELECT a_id AS s, b_id AS d FROM pairs
@@ -1108,40 +1120,18 @@ object TextQueries {
     // source joins; the matrix agg collapses to ≤ |sources|² rows map-side.
     "source_dup_matrix" -> Q(
       fn = (s, dir) => {
-        val (pairs, shCache) = minhashPairsWithHandle(s, dir)
-        shCache // query-scoped cache (see Q's cache-lifecycle contract)
+        // the shingle cache is query-scoped (see Q's cache-lifecycle contract)
+        val (pairs, _) = minhashPairsWithHandle(s, dir)
         dupMatrixFrom(pairs, Tables.load(s, dir, "documents"))
       },
-      oracle = Some {
-        val sigs = (0 until NumHashes).map(k =>
-          s"list_min(list_transform(shingles, s -> substring(md5(s), ${4 * k + 1}, 4))) AS sig$k").mkString(",\n       ")
-        val bandSelects = (0 until NumHashes / BandSize).map(b =>
-          s"SELECT doc_id, md5('$b' || '|' || sig${2 * b} || '|' || sig${2 * b + 1}) AS bk FROM sig")
-          .mkString("\n  UNION ALL\n  ")
-        s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-           |sh AS (SELECT doc_id, $shinglesSqlDuck AS shingles FROM t WHERE len(toks) >= 3),
-           |sig AS (SELECT doc_id, shingles,
-           |       $sigs
-           |FROM sh),
-           |bands AS (
-           |  $bandSelects
-           |),
-           |cand AS (
-           |  SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id
-           |  FROM bands x JOIN bands y ON x.bk = y.bk AND x.doc_id < y.doc_id
-           |),
-           |pairs AS (
-           |  SELECT a_id, b_id FROM cand
-           |  JOIN sh a ON a.doc_id = a_id JOIN sh b ON b.doc_id = b_id
-           |  WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-           |         / len(list_distinct(a.shingles || b.shingles)) >= 0.5)
+      oracle = Some(
+        s"""WITH $minhashPairsSqlCtes
            |SELECT least(da.source, db.source) AS source_x,
            |       greatest(da.source, db.source) AS source_y,
            |       CAST(COUNT(*) AS BIGINT) AS n_pairs
            |FROM pairs JOIN documents da ON da.doc_id = a_id
            |           JOIN documents db ON db.doc_id = b_id
-           |GROUP BY 1, 2 ORDER BY source_x, source_y""".stripMargin
-      }),
+           |GROUP BY 1, 2 ORDER BY source_x, source_y""".stripMargin)),
 
     // ---- shared-prefix boilerplate clusters (added r8) -------------------
     // Template/boilerplate detection at the document HEAD — the Common
@@ -1303,25 +1293,9 @@ object TextQueries {
           .orderBy("a_id", "b_id")
       },
       oracle = Some {
-        val sigs = (0 until NumHashes).map(k =>
-          s"list_min(list_transform(shingles, s -> substring(md5(s), ${4 * k + 1}, 4))) AS sig$k").mkString(",\n       ")
-        val bandSelects = (0 until NumHashes / BandSize).map(b =>
-          s"SELECT doc_id, md5('$b' || '|' || sig${2 * b} || '|' || sig${2 * b + 1}) AS bk FROM sig")
-          .mkString("\n  UNION ALL\n  ")
         val mSum = (0 until NumHashes).map(k =>
           s"(CASE WHEN a.sig$k = b.sig$k THEN 1 ELSE 0 END)").mkString(" + ")
-        s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-           |sh AS (SELECT doc_id, $shinglesSqlDuck AS shingles FROM t WHERE len(toks) >= 3),
-           |sig AS (SELECT doc_id, shingles,
-           |       $sigs
-           |FROM sh),
-           |bands AS (
-           |  $bandSelects
-           |),
-           |cand AS (
-           |  SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id
-           |  FROM bands x JOIN bands y ON x.bk = y.bk AND x.doc_id < y.doc_id
-           |),
+        s"""WITH $minhashCandSqlCtes,
            |j AS (
            |  SELECT a_id, b_id, $mSum AS m,
            |         len(list_intersect(a.shingles, b.shingles)) AS i,
@@ -1509,20 +1483,9 @@ object TextQueries {
               .as("precision"))
           .orderBy("band")
       },
-      oracle = Some {
-        val sigs = (0 until NumHashes).map(k =>
-          s"list_min(list_transform(shingles, s -> substring(md5(s), ${4 * k + 1}, 4))) AS sig$k").mkString(",\n       ")
-        val bandSelects = (0 until NumHashes / BandSize).map(b =>
-          s"SELECT doc_id, $b AS band, md5('$b' || '|' || sig${2 * b} || '|' || sig${2 * b + 1}) AS bk FROM sig")
-          .mkString("\n  UNION ALL\n  ")
+      oracle = Some(
         s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-           |sh AS (SELECT doc_id, $shinglesSqlDuck AS shingles FROM t WHERE len(toks) >= 3),
-           |sig AS (SELECT doc_id, shingles,
-           |       $sigs
-           |FROM sh),
-           |bands AS (
-           |  $bandSelects
-           |),
+           |$minhashBandsSqlCtes,
            |cand AS (
            |  SELECT DISTINCT x.band, x.doc_id AS a_id, y.doc_id AS b_id
            |  FROM bands x JOIN bands y ON x.bk = y.bk AND x.doc_id < y.doc_id
@@ -1536,8 +1499,7 @@ object TextQueries {
            |        FROM v GROUP BY band)
            |SELECT CAST(band AS INTEGER) AS band, n_cand, n_verified,
            |       CAST(n_verified AS DOUBLE) / CAST(n_cand AS DOUBLE) AS precision
-           |FROM agg ORDER BY band""".stripMargin
-      }),
+           |FROM agg ORDER BY band""".stripMargin)),
 
     // ---- Jaccard threshold curve over the banded candidates (r8) ---------
     // The dedup-aggressiveness dial: how many verified near-dup pairs
@@ -1593,28 +1555,12 @@ object TextQueries {
           .orderBy("threshold")
       },
       oracle = Some {
-        val sigs = (0 until NumHashes).map(k =>
-          s"list_min(list_transform(shingles, s -> substring(md5(s), ${4 * k + 1}, 4))) AS sig$k").mkString(",\n       ")
-        val bandSelects = (0 until NumHashes / BandSize).map(b =>
-          s"SELECT doc_id, md5('$b' || '|' || sig${2 * b} || '|' || sig${2 * b + 1}) AS bk FROM sig")
-          .mkString("\n  UNION ALL\n  ")
         val counts = (30 to 80 by 10).map(t =>
           s"CAST(SUM(CASE WHEN i * 100 >= u * $t THEN 1 ELSE 0 END) AS BIGINT) AS c$t")
           .mkString(",\n       ")
         val rows = (30 to 80 by 10).map(t =>
           s"SELECT $t AS threshold, n_cand, c$t AS n_pairs FROM a").mkString("\nUNION ALL\n")
-        s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-           |sh AS (SELECT doc_id, $shinglesSqlDuck AS shingles FROM t WHERE len(toks) >= 3),
-           |sig AS (SELECT doc_id, shingles,
-           |       $sigs
-           |FROM sh),
-           |bands AS (
-           |  $bandSelects
-           |),
-           |cand AS (
-           |  SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id
-           |  FROM bands x JOIN bands y ON x.bk = y.bk AND x.doc_id < y.doc_id
-           |),
+        s"""WITH $minhashCandSqlCtes,
            |iu AS (SELECT CAST(len(list_intersect(a.shingles, b.shingles)) AS BIGINT) AS i,
            |              CAST(len(list_distinct(a.shingles || b.shingles)) AS BIGINT) AS u
            |       FROM cand JOIN sh a ON a.doc_id = a_id JOIN sh b ON b.doc_id = b_id),
@@ -1892,36 +1838,19 @@ object TextQueries {
     // candidate pairs share ≥1 band key; verified with exact Jaccard ≥ 0.5.
     "dedup_minhash_lsh" -> Q(
       fn = (s, dir) => {
-        val (pairs, shCache) = minhashPairsWithHandle(s, dir)
-        shCache // query-scoped cache (see Q's cache-lifecycle contract)
+        // the shingle cache is query-scoped (see Q's cache-lifecycle contract)
+        val (pairs, _) = minhashPairsWithHandle(s, dir)
         pairs.orderBy("a_id", "b_id")
       },
-      oracle = Some {
-        val sigs = (0 until NumHashes).map(k =>
-          s"list_min(list_transform(shingles, s -> substring(md5(s), ${4 * k + 1}, 4))) AS sig$k").mkString(",\n       ")
-        val bandSelects = (0 until NumHashes / BandSize).map(b =>
-          s"SELECT doc_id, md5('$b' || '|' || sig${2 * b} || '|' || sig${2 * b + 1}) AS bk FROM sig")
-          .mkString("\n  UNION ALL\n  ")
-        s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-           |sh AS (SELECT doc_id, $shinglesSqlDuck AS shingles FROM t WHERE len(toks) >= 3),
-           |sig AS (SELECT doc_id, shingles,
-           |       $sigs
-           |FROM sh),
-           |bands AS (
-           |  $bandSelects
-           |),
-           |cand AS (
-           |  SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id
-           |  FROM bands x JOIN bands y ON x.bk = y.bk AND x.doc_id < y.doc_id
-           |)
+      oracle = Some(
+        s"""WITH $minhashCandSqlCtes
            |SELECT a_id, b_id,
            |       CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
            |         / len(list_distinct(a.shingles || b.shingles)) AS jacc
            |FROM cand JOIN sh a ON a.doc_id = a_id JOIN sh b ON b.doc_id = b_id
            |WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
            |         / len(list_distinct(a.shingles || b.shingles)) >= 0.5
-           |ORDER BY a_id, b_id""".stripMargin
-      },
+           |ORDER BY a_id, b_id""".stripMargin),
       headline = true),
 
     // ---- text near-dup CLUSTERS: CC over the MinHash pair graph (r6) -----
@@ -1950,8 +1879,8 @@ object TextQueries {
     // agg; nothing new shuffles at corpus scale.
     "split_leakage" -> Q(
       fn = (s, dir) => {
-        val (pairsDf, shCache) = minhashPairsWithHandle(s, dir)
-        shCache // query-scoped cache (see Q's cache-lifecycle contract)
+        // the shingle cache is query-scoped (see Q's cache-lifecycle contract)
+        val (pairsDf, _) = minhashPairsWithHandle(s, dir)
         val split = Tables.load(s, dir, "documents")
           .withColumn("h2",
             substring(md5(concat(lit("split:"), col("doc_id").cast("string"))), 1, 2))
@@ -2114,14 +2043,8 @@ object TextQueries {
             (lit(1.0) - x * x * x * x).as("p_band"))
           .orderBy("jbucket")
       },
-      oracle = Some {
-        val sigs = (0 until NumHashes).map(k =>
-          s"list_min(list_transform(shingles, s -> substring(md5(s), ${4 * k + 1}, 4))) AS sig$k").mkString(",\n       ")
-        val bandSelects = (0 until NumHashes / BandSize).map(b =>
-          s"SELECT doc_id, md5('$b' || '|' || sig${2 * b} || '|' || sig${2 * b + 1}) AS bk FROM sig")
-          .mkString("\n  UNION ALL\n  ")
-        s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-           |sh AS (SELECT doc_id, $shinglesSqlDuck AS shingles FROM t WHERE len(toks) >= 3),
+      oracle = Some(
+        s"""WITH $minhashPairsSqlCtes,
            |shs AS (SELECT doc_id, UNNEST(shingles) AS g FROM sh),
            |inter AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS n_inter
            |          FROM shs a JOIN shs b ON a.g = b.g AND a.doc_id < b.doc_id
@@ -2133,22 +2056,10 @@ object TextQueries {
            |          JOIN sizes sa ON sa.doc_id = a_id
            |          JOIN sizes sb ON sb.doc_id = b_id
            |          WHERE CAST(n_inter AS DOUBLE) / (sa.sz + sb.sz - n_inter) >= 0.5),
-           |sig AS (SELECT doc_id, shingles,
-           |       $sigs
-           |FROM sh),
-           |bands AS (
-           |  $bandSelects
-           |),
-           |cand AS (SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id
-           |         FROM bands x JOIN bands y ON x.bk = y.bk AND x.doc_id < y.doc_id),
-           |lsh AS (SELECT a_id, b_id
-           |        FROM cand JOIN sh a ON a.doc_id = a_id JOIN sh b ON b.doc_id = b_id
-           |        WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-           |                / len(list_distinct(a.shingles || b.shingles)) >= 0.5),
            |curve AS (SELECT CAST(floor(jacc * CAST(10 AS DOUBLE)) AS INTEGER) AS jbucket,
            |                 COUNT(*) AS n_true,
            |                 CAST(SUM(CASE WHEN l.a_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_caught
-           |          FROM truth tr LEFT JOIN lsh l ON tr.a_id = l.a_id AND tr.b_id = l.b_id
+           |          FROM truth tr LEFT JOIN pairs l ON tr.a_id = l.a_id AND tr.b_id = l.b_id
            |          GROUP BY 1),
            |c2 AS (SELECT jbucket, n_true, n_caught,
            |              (CAST(jbucket AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(10 AS DOUBLE) AS j
@@ -2157,8 +2068,7 @@ object TextQueries {
            |SELECT jbucket, n_true, n_caught,
            |       CAST(n_caught AS DOUBLE) / CAST(n_true AS DOUBLE) AS recall,
            |       CAST(1 AS DOUBLE) - x * x * x * x AS p_band
-           |FROM x2 ORDER BY jbucket""".stripMargin
-      }),
+           |FROM x2 ORDER BY jbucket""".stripMargin)),
 
     // ---- incremental dedup: new crawl batch vs existing corpus (r7) ------
     // The dedup workflow a LIVE corpus actually runs: yesterday's corpus is
@@ -2206,20 +2116,9 @@ object TextQueries {
               .otherwise(0L)).as("n_fresh"))
           .orderBy("source")
       },
-      oracle = Some {
-        val sigs = (0 until NumHashes).map(k =>
-          s"list_min(list_transform(shingles, s -> substring(md5(s), ${4 * k + 1}, 4))) AS sig$k").mkString(",\n       ")
-        val bandSelects = (0 until NumHashes / BandSize).map(b =>
-          s"SELECT doc_id, md5('$b' || '|' || sig${2 * b} || '|' || sig${2 * b + 1}) AS bk FROM sig")
-          .mkString("\n  UNION ALL\n  ")
+      oracle = Some(
         s"""WITH t AS (SELECT doc_id, source, text, string_split(text, ' ') AS toks FROM documents),
-           |sh AS (SELECT doc_id, $shinglesSqlDuck AS shingles FROM t WHERE len(toks) >= 3),
-           |sig AS (SELECT doc_id, shingles,
-           |       $sigs
-           |FROM sh),
-           |bands AS (
-           |  $bandSelects
-           |),
+           |$minhashBandsSqlCtes,
            |exact AS (SELECT DISTINCT n.doc_id
            |          FROM t n JOIN t o ON md5(n.text) = md5(o.text)
            |          WHERE n.doc_id % 10 = 0 AND o.doc_id % 10 != 0),
@@ -2237,8 +2136,7 @@ object TextQueries {
            |FROM t LEFT JOIN exact e ON t.doc_id = e.doc_id
            |       LEFT JOIN near nr ON t.doc_id = nr.doc_id
            |WHERE t.doc_id % 10 = 0
-           |GROUP BY source ORDER BY source""".stripMargin
-      }),
+           |GROUP BY source ORDER BY source""".stripMargin)),
 
     // ---- cluster survivorship: the merge-policy half of dedup (added r6) -
     // After near-dup clustering, CHOOSE the representative: per cluster the
@@ -2257,40 +2155,10 @@ object TextQueries {
         shCache.unpersist()
         survivorshipFrom(labels, Tables.load(s, dir, "documents"))
       },
-      oracle = Some {
-        val sigs = (0 until NumHashes).map(k =>
-          s"list_min(list_transform(shingles, s -> substring(md5(s), ${4 * k + 1}, 4))) AS sig$k").mkString(",\n       ")
-        val bandSelects = (0 until NumHashes / BandSize).map(b =>
-          s"SELECT doc_id, md5('$b' || '|' || sig${2 * b} || '|' || sig${2 * b + 1}) AS bk FROM sig")
-          .mkString("\n  UNION ALL\n  ")
-        s"""WITH RECURSIVE t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-           |sh AS (SELECT doc_id, $shinglesSqlDuck AS shingles FROM t WHERE len(toks) >= 3),
-           |sig AS (SELECT doc_id, shingles,
-           |       $sigs
-           |FROM sh),
-           |bands AS (
-           |  $bandSelects
-           |),
-           |cand AS (
-           |  SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id
-           |  FROM bands x JOIN bands y ON x.bk = y.bk AND x.doc_id < y.doc_id
-           |),
-           |pairs AS (
-           |  SELECT a_id, b_id FROM cand
-           |  JOIN sh a ON a.doc_id = a_id JOIN sh b ON b.doc_id = b_id
-           |  WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-           |         / len(list_distinct(a.shingles || b.shingles)) >= 0.5),
-           |sym AS (SELECT a_id AS s, b_id AS d FROM pairs
-           |        UNION ALL SELECT b_id, a_id FROM pairs),
-           |reach(s, d) AS (
-           |  SELECT s, d FROM sym
-           |  UNION
-           |  SELECT r.s, e2.d FROM reach r JOIN sym e2 ON r.d = e2.s WHERE r.s != e2.d
-           |),
-           |labels AS (SELECT s AS doc_id, LEAST(s, MIN(d)) AS cluster
-           |           FROM reach GROUP BY s),
+      oracle = Some(
+        s"""WITH RECURSIVE $minhashClusterSqlCtes,
            |j AS (SELECT l.cluster, l.doc_id, d.n_chars
-           |      FROM labels l JOIN documents d USING (doc_id)),
+           |      FROM lab l JOIN documents d USING (doc_id)),
            |rk AS (SELECT cluster, doc_id, n_chars, ROW_NUMBER() OVER (
            |         PARTITION BY cluster ORDER BY n_chars DESC, doc_id) AS rk FROM j),
            |agg AS (SELECT cluster, COUNT(*) AS n_members,
@@ -2298,8 +2166,7 @@ object TextQueries {
            |SELECT a.cluster, r.doc_id AS survivor_id, a.n_members,
            |       CAST(a.total - r.n_chars AS BIGINT) AS reclaimed_chars
            |FROM agg a JOIN rk r ON r.cluster = a.cluster AND r.rk = 1
-           |ORDER BY a.cluster""".stripMargin
-      }),
+           |ORDER BY a.cluster""".stripMargin)),
 
     // ---- n-gram Jaccard similarity over a candidate window ---------------
     // All-pairs within each source (sources are small groups) — exact

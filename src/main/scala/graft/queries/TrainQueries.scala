@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.VectorFunctions.floatL2Sq
+import graft.queries.SimilarityQueries.{duckL2Double, duckL2Full}
 
 /** Training-loop computations (§2.4, added r5): the in-engine halves of
   * model/tokenizer training — one Lloyd iteration for centroid learning and
@@ -63,19 +64,14 @@ object TrainQueries {
             col("s6").cast("decimal(20,6)").cast("double").as("c_sum"))
           .orderBy("cluster", "dim")
       },
-      oracle = Some {
-        val l2 =
-          """list_reduce(list_transform(range(1, 65),
-            |  i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(c.centv[i] AS DOUBLE))
-            |     * (CAST(e.embedding[i] AS DOUBLE) - CAST(c.centv[i] AS DOUBLE))),
-            |  (acc, v) -> acc + v)""".stripMargin
+      oracle = Some(
         s"""WITH cents AS (SELECT vec_id AS cent_id, embedding AS centv
            |               FROM embeddings WHERE vec_id < 16),
            |assigned AS (
            |  SELECT cluster, embedding FROM (
            |    SELECT e.vec_id, e.embedding, c.cent_id AS cluster,
            |           ROW_NUMBER() OVER (PARTITION BY e.vec_id
-           |                              ORDER BY $l2, c.cent_id) AS rk
+           |                              ORDER BY ${duckL2Full("e.embedding", "c.centv")}, c.cent_id) AS rk
            |    FROM embeddings e CROSS JOIN cents c) t
            |  WHERE rk = 1),
            |flat AS (
@@ -86,8 +82,7 @@ object TrainQueries {
            |SELECT cluster, dim, COUNT(*) AS n_members,
            |       CAST(CAST(SUM(v6) AS DECIMAL(20,6)) AS DOUBLE) AS c_sum
            |FROM flat GROUP BY cluster, dim
-           |ORDER BY cluster, dim""".stripMargin
-      }),
+           |ORDER BY cluster, dim""".stripMargin)),
 
     // ---- source × semantic-cluster mix profile (added r7) ----------------
     // Where each SOURCE lands in embedding space: every document's vector
@@ -130,19 +125,14 @@ object TrainQueries {
             (col("n").cast("double") / col("ns").cast("double")).as("share"))
           .orderBy("source", "cluster")
       },
-      oracle = Some {
-        val l2 =
-          """list_reduce(list_transform(range(1, 65),
-            |  i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(c.centv[i] AS DOUBLE))
-            |     * (CAST(e.embedding[i] AS DOUBLE) - CAST(c.centv[i] AS DOUBLE))),
-            |  (acc, v) -> acc + v)""".stripMargin
+      oracle = Some(
         s"""WITH cents AS (SELECT vec_id AS cent_id, embedding AS centv
            |               FROM embeddings WHERE vec_id < 16),
            |assigned AS (
            |  SELECT vec_id AS doc_id, cluster FROM (
            |    SELECT e.vec_id, c.cent_id AS cluster,
            |           ROW_NUMBER() OVER (PARTITION BY e.vec_id
-           |                              ORDER BY $l2, c.cent_id) AS rk
+           |                              ORDER BY ${duckL2Full("e.embedding", "c.centv")}, c.cent_id) AS rk
            |    FROM embeddings e CROSS JOIN cents c) t
            |  WHERE rk = 1),
            |sc AS (SELECT d.source, a.cluster, COUNT(*) AS n
@@ -152,8 +142,7 @@ object TrainQueries {
            |SELECT sc.source, sc.cluster, sc.n,
            |       CAST(n AS DOUBLE) / CAST(ns AS DOUBLE) AS share
            |FROM sc JOIN tot ON sc.source = tot.source
-           |ORDER BY sc.source, sc.cluster""".stripMargin
-      }),
+           |ORDER BY sc.source, sc.cluster""".stripMargin)),
 
     // ---- cluster-vs-label purity (added r8) ------------------------------
     // The unsupervised-vs-supervised cross-check: per k-means cluster (the
@@ -193,19 +182,14 @@ object TrainQueries {
             (col("n_top").cast("double") / col("n_total").cast("double")).as("purity"))
           .orderBy("cluster")
       },
-      oracle = Some {
-        val l2 =
-          """list_reduce(list_transform(range(1, 65),
-            |  i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(c.centv[i] AS DOUBLE))
-            |     * (CAST(e.embedding[i] AS DOUBLE) - CAST(c.centv[i] AS DOUBLE))),
-            |  (acc, v) -> acc + v)""".stripMargin
+      oracle = Some(
         s"""WITH cents AS (SELECT vec_id AS cent_id, embedding AS centv
            |               FROM embeddings WHERE vec_id < 16),
            |assigned AS (
            |  SELECT label, cluster FROM (
            |    SELECT e.vec_id, e.label, c.cent_id AS cluster,
            |           ROW_NUMBER() OVER (PARTITION BY e.vec_id
-           |                              ORDER BY $l2, c.cent_id) AS rk
+           |                              ORDER BY ${duckL2Full("e.embedding", "c.centv")}, c.cent_id) AS rk
            |    FROM embeddings e CROSS JOIN cents c) t
            |  WHERE rk = 1),
            |cl AS (SELECT cluster, label, CAST(COUNT(*) AS BIGINT) AS n
@@ -218,8 +202,7 @@ object TrainQueries {
            |        FROM cl)
            |SELECT cluster, n_total, top_label, n_top,
            |       CAST(n_top AS DOUBLE) / CAST(n_total AS DOUBLE) AS purity
-           |FROM top WHERE rk = 1 ORDER BY cluster""".stripMargin
-      }),
+           |FROM top WHERE rk = 1 ORDER BY cluster""".stripMargin)),
 
     // ---- simplified-silhouette separation share (added r8) ---------------
     // Clustering-quality eval beside cluster_purity (label view): the
@@ -265,15 +248,10 @@ object TrainQueries {
             (col("n_sep").cast("double") / col("n").cast("double")).as("sep_share"))
           .orderBy("cluster")
       },
-      oracle = Some {
-        val l2 =
-          """list_reduce(list_transform(range(1, 65),
-            |  i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(c.centv[i] AS DOUBLE))
-            |     * (CAST(e.embedding[i] AS DOUBLE) - CAST(c.centv[i] AS DOUBLE))),
-            |  (acc, v) -> acc + v)""".stripMargin
+      oracle = Some(
         s"""WITH cents AS (SELECT vec_id AS cent_id, embedding AS centv
            |               FROM embeddings WHERE vec_id < 16),
-           |d AS (SELECT e.vec_id, c.cent_id, $l2 AS d2
+           |d AS (SELECT e.vec_id, c.cent_id, ${duckL2Full("e.embedding", "c.centv")} AS d2
            |      FROM embeddings e CROSS JOIN cents c),
            |r AS (SELECT vec_id, cent_id, d2,
            |             ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -285,8 +263,7 @@ object TrainQueries {
            |       CAST(SUM(CASE WHEN a2 < b2 THEN 1 ELSE 0 END) AS BIGINT) AS n_sep,
            |       CAST(SUM(CASE WHEN a2 < b2 THEN 1 ELSE 0 END) AS DOUBLE)
            |         / CAST(COUNT(*) AS DOUBLE) AS sep_share
-           |FROM b GROUP BY cluster ORDER BY cluster""".stripMargin
-      }),
+           |FROM b GROUP BY cluster ORDER BY cluster""".stripMargin)),
 
     // ---- multi-iteration k-means training (added r6) ---------------------
     // Three chained Lloyd iterations — the real training LOOP, not just one
@@ -662,16 +639,12 @@ object TrainQueries {
               |             list_reduce(list_transform(centv, x -> x * x),
               |                         (a, v) -> a + v) AS cn2
               |      FROM ($inner))""".stripMargin
-    def l2(e: String, c: String) =
-      s"""list_reduce(list_transform(range(1, 65),
-         |  i -> ($e[i] - $c[i]) * ($e[i] - $c[i])),
-         |  (acc, v) -> acc + v)""".stripMargin
     val iters = (1 to 3).map { k =>
       s"""a$k AS (
          |  SELECT cluster, emb FROM (
          |    SELECT e.vec_id, e.emb, c.cent_id AS cluster,
          |           ROW_NUMBER() OVER (PARTITION BY e.vec_id
-         |                              ORDER BY ${l2("e.emb", "c.centv")}, c.cent_id) AS rk
+         |                              ORDER BY ${duckL2Double("e.emb", "c.centv")}, c.cent_id) AS rk
          |    FROM e CROSS JOIN c${k - 1} c) t
          |  WHERE rk = 1),
          |f$k AS (

@@ -3,8 +3,10 @@ package graft.sql
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.core.{BucketLayout, BucketPriorityConfig}
+import graft.functions.BucketSqlFunctions
 
 /** The reference's produce-path semantics (§2.1 `bucket_of`, `route`,
   * `discard`) as declarative DataFrame transforms.
@@ -47,11 +49,11 @@ import graft.core.{BucketLayout, BucketPriorityConfig}
   */
 object BucketRouting {
 
-  /** `bucket_of(key)` as a pure Column (no UDF — codegen-friendly). */
-  def bucketOf(key: Column, cfg: BucketPriorityConfig): Column = {
-    val first = trim(split(key, cfg.delimiter).getItem(0))
-    when(key.isNotNull && first.isin(cfg.buckets: _*), first)
-  }
+  /** `bucket_of(key)` as a pure Column (no UDF — codegen-friendly): the
+    * SQL surface's [[graft.functions.BucketSqlFunctions.bucketOfExpr]]
+    * tree, so the DataFrame and SQL forms are one expression. */
+  def bucketOf(key: Column, cfg: BucketPriorityConfig): Column =
+    Bridge.column(BucketSqlFunctions.bucketOfExpr(Bridge.expression(key), cfg))
 
   /** Chained CASE over the (tiny) bucket list: bucket name → value. */
   private def bucketCase[T](bucket: Column, mapping: Seq[(String, T)]): Column =
