@@ -1,11 +1,21 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.core.BucketPriorityConfig
 
-/** §2.5: expose the bucket operators on the SQL surface.
+/** §2.5: graft's SQL surface, written once.
+  *
+  * [[functions]] is the one table of graft's SQL functions — name,
+  * expression class and builder, with every arity and integer-literal check
+  * spelled out here. [[GraftExtensions]] injects the table cluster-wide and
+  * [[registerFunctions]] registers the same entries in one session, so the
+  * two paths cannot drift. `bucket_of` (bound to a config) and `gram_micro`
+  * (a UDAF) stay session-only, in [[registerAll]].
   *
   * `bucket_of` is built from catalyst nodes directly because a
   * function-registry lambda must return an evaluable tree;
@@ -13,6 +23,65 @@ import graft.core.BucketPriorityConfig
   * a Column, so the SQL and DataFrame surfaces share one expression.
   */
 object BucketSqlFunctions {
+
+  /** One SQL function: the triple `SparkSessionExtensions.injectFunction`
+    * and `FunctionRegistry.registerFunction` both take. */
+  type SqlFunction = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
+
+  /** A table entry whose builder checks the argument count first. */
+  private def fn(name: String, cls: Class[_], arity: Int)(
+      build: Seq[Expression] => Expression): SqlFunction =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), exprs => {
+      require(exprs.length == arity, s"$name requires exactly $arity argument" +
+        s"${if (arity == 1) "" else "s"}, got ${exprs.length}")
+      build(exprs)
+    })
+
+  /** An argument fixed at plan time: it must be an integer literal. */
+  private def intArg(name: String, arg: String, e: Expression): Int = e match {
+    case Literal(v: Int, _) => v
+    case other => throw new IllegalArgumentException(
+      s"$name $arg must be an integer literal, got $other")
+  }
+
+  /** Every SQL function graft adds to Spark, for both registration paths. */
+  val functions: Seq[SqlFunction] = Seq(
+    // like Divide, the eval mode is captured from the session conf at PARSE
+    // time, so both registration paths agree mode-for-mode
+    fn("cosine_similarity", classOf[CosineSimilarity], 2)(e =>
+      CosineSimilarity(e(0), e(1), EvalMode.fromSQLConf(SQLConf.get))),
+    fn("simhash_fingerprint", classOf[SimhashFingerprint], 1)(e =>
+      SimhashFingerprint(e(0))),
+    fn("minhash_signature", classOf[MinhashSignature], 1)(e =>
+      MinhashSignature(e(0))),
+    fn("min_window_md5", classOf[MinWindowMd5], 2)(e =>
+      MinWindowMd5(e(0), intArg("min_window_md5", "width", e(1)))),
+    fn("shingle_set", classOf[ShingleSet], 2)(e =>
+      ShingleSet(e(0), intArg("shingle_set", "width", e(1)))),
+    fn("vector_l2sq", classOf[VectorL2Sq], 2)(e =>
+      VectorL2Sq(e(0), e(1))),
+    fn("winnow_fingerprints", classOf[WinnowFingerprints], 3)(e =>
+      WinnowFingerprints(e(0), intArg("winnow_fingerprints", "k", e(1)),
+        intArg("winnow_fingerprints", "w", e(2)))),
+    // the bloom membership-prefilter pair (see functions/BloomFunctions —
+    // Spark ships these expressions for runtime join pruning but leaves
+    // them off the 4.1 SQL registry): bloom_filter_agg(xxhash64(x), items)
+    // builds the filter, might_contain(bf, xxhash64(x)) probes it (filter
+    // side must be a constant or scalar subquery)
+    fn("bloom_filter_agg", classOf[BloomFilterAggregate], 2)(e =>
+      new BloomFilterAggregate(e(0), e(1) match {
+        case Literal(n: Long, _) => n
+        case other => intArg("bloom_filter_agg", "estimatedItems", other).toLong
+      }).toAggregateExpression()),
+    fn("might_contain", classOf[BloomFilterMightContain], 2)(e =>
+      BloomFilterMightContain(e(0), e(1))))
+
+  /** Register every [[functions]] entry in this session's function
+    * registry — the per-session twin of [[GraftExtensions]]. */
+  def registerFunctions(spark: SparkSession): Unit =
+    functions.foreach { case (id, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
+    }
 
   /** bucket_of(key) as a catalyst tree:
     * CASE WHEN key IS NOT NULL AND trim(split(key, delim)[0]) IN (buckets)
@@ -37,8 +106,7 @@ object BucketSqlFunctions {
     (java.lang.ref.WeakReference[SparkSession], BucketPriorityConfig)]()
 
   private def bucketOfBound(spark: SparkSession): Boolean =
-    spark.sessionState.functionRegistry.functionExists(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("bucket_of"))
+    spark.sessionState.functionRegistry.functionExists(FunctionIdentifier("bucket_of"))
 
   /** Register `bucket_of(key)` bound to `cfg` in this session's function
     * registry. Idempotent per (session, cfg) while the binding is live;
@@ -64,108 +132,22 @@ object BucketSqlFunctions {
   /** Register everything the SQL surface offers. */
   def registerAll(spark: SparkSession, cfg: BucketPriorityConfig): Unit = {
     registerBucketOf(spark, cfg)
-    VectorFunctions.registerSql(spark)
-    registerTextHash(spark)
+    registerFunctions(spark)
     // gram_micro(embedding) → array<bigint> d²: the one-pass exact Gram
     // aggregator (GramAgg) on the SQL surface, same registration path as
     // any public UDAF
     spark.udf.register("gram_micro", GramAgg.gramMicro)
   }
+}
 
-  /** Register the text-hash expressions (`simhash_fingerprint(shingles)`,
-    * `minhash_signature(shingles)`, `min_window_md5(toks, width)`) for the
-    * SQL surface — the session-level twin of their GraftExtensions
-    * injections. */
-  def registerTextHash(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_fingerprint",
-      exprs => {
-        require(exprs.length == 1,
-          s"simhash_fingerprint requires exactly 1 argument, got ${exprs.length}")
-        SimhashFingerprint(exprs.head)
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_signature",
-      exprs => {
-        require(exprs.length == 1,
-          s"minhash_signature requires exactly 1 argument, got ${exprs.length}")
-        MinhashSignature(exprs.head)
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_set",
-      exprs => {
-        require(exprs.length == 2,
-          s"shingle_set requires exactly 2 arguments, got ${exprs.length}")
-        ShingleSet(exprs.head, exprs(1) match {
-          case Literal(w: Int, _) => w
-          case other => throw new IllegalArgumentException(
-            s"shingle_set width must be an integer literal, got $other")
-        })
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "min_window_md5",
-      exprs => {
-        require(exprs.length == 2,
-          s"min_window_md5 requires exactly 2 arguments, got ${exprs.length}")
-        MinWindowMd5(exprs.head, exprs(1) match {
-          case Literal(w: Int, _) => w
-          case other => throw new IllegalArgumentException(
-            s"min_window_md5 width must be an integer literal, got $other")
-        })
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vector_l2sq",
-      exprs => {
-        require(exprs.length == 2,
-          s"vector_l2sq requires exactly 2 arguments, got ${exprs.length}")
-        VectorL2Sq(exprs(0), exprs(1))
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_fingerprints",
-      exprs => {
-        require(exprs.length == 3,
-          s"winnow_fingerprints requires exactly 3 arguments, got ${exprs.length}")
-        def intLit(e: Expression, name: String): Int = e match {
-          case Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"winnow_fingerprints $name must be an integer literal, got $other")
-        }
-        WinnowFingerprints(exprs.head, intLit(exprs(1), "k"), intLit(exprs(2), "w"))
-      },
-      "built-in")
-    // the bloom membership-prefilter pair (see functions/BloomFunctions —
-    // Spark ships these expressions for runtime join pruning but leaves
-    // them off the 4.1 SQL registry): bloom_filter_agg(xxhash64(x), items)
-    // builds the filter, might_contain(bf, xxhash64(x)) probes it (filter
-    // side must be a constant or scalar subquery)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_filter_agg",
-      exprs => {
-        require(exprs.length == 2,
-          s"bloom_filter_agg requires exactly 2 arguments, got ${exprs.length}")
-        val items = exprs(1) match {
-          case Literal(n: Long, _) => n
-          case Literal(n: Int, _) => n.toLong
-          case other => throw new IllegalArgumentException(
-            s"bloom_filter_agg estimatedItems must be an integer literal, got $other")
-        }
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          exprs.head, items).toAggregateExpression()
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "might_contain",
-      exprs => {
-        require(exprs.length == 2,
-          s"might_contain requires exactly 2 arguments, got ${exprs.length}")
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          exprs(0), exprs(1))
-      },
-      "built-in")
+/** Cluster-wide registration: the [[FuseCosineRule]] optimizer fusion, the
+  * router's planner strategy and every [[BucketSqlFunctions.functions]]
+  * entry. Use with
+  * `--conf spark.sql.extensions=graft.functions.GraftExtensions`. */
+class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectOptimizerRule(_ => FuseCosineRule)
+    ext.injectPlannerStrategy(_ => graft.plans.GraftStrategy)
+    BucketSqlFunctions.functions.foreach(ext.injectFunction)
   }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -91,104 +90,5 @@ object FuseCosineRule extends Rule[LogicalPlan] {
           CosineSimilarity(a, b, ctx.evalMode)
         case _ => d // not the pattern: leave the ORIGINAL node (and its EvalMode) intact
       }
-  }
-}
-
-/** Cluster-wide registration: optimizer fusion + SQL functions.
-  * Use with `--conf spark.sql.extensions=graft.functions.GraftExtensions`. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(_ => FuseCosineRule)
-    ext.injectPlannerStrategy(_ => graft.plans.GraftStrategy)
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_similarity"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_similarity"),
-      // builder runs at parse time — capture the session's eval mode then,
-      // exactly like Divide and VectorFunctions.registerSql, so the
-      // extensions path and the temp-function path agree mode-for-mode
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1),
-        EvalMode.fromSQLConf(org.apache.spark.sql.internal.SQLConf.get))))
-    // the round-4 text-hash expressions, cluster-wide
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("simhash_fingerprint"),
-      new ExpressionInfo(classOf[SimhashFingerprint].getName, "simhash_fingerprint"),
-      (exprs: Seq[Expression]) => SimhashFingerprint(exprs.head)))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("minhash_signature"),
-      new ExpressionInfo(classOf[MinhashSignature].getName, "minhash_signature"),
-      (exprs: Seq[Expression]) => MinhashSignature(exprs.head)))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("min_window_md5"),
-      new ExpressionInfo(classOf[MinWindowMd5].getName, "min_window_md5"),
-      (exprs: Seq[Expression]) => MinWindowMd5(exprs.head,
-        exprs(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(w: Int, _) => w
-          case other => throw new IllegalArgumentException(
-            s"min_window_md5 width must be an integer literal, got $other")
-        })))
-    // the round-7 shingle head, cluster-wide (same int-literal width
-    // discipline as min_window_md5)
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("shingle_set"),
-      new ExpressionInfo(classOf[ShingleSet].getName, "shingle_set"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2,
-          s"shingle_set requires exactly 2 arguments, got ${exprs.length}")
-        ShingleSet(exprs.head, exprs(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(w: Int, _) => w
-          case other => throw new IllegalArgumentException(
-            s"shingle_set width must be an integer literal, got $other")
-        })
-      }))
-    // the round-6 expressions, cluster-wide
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("vector_l2sq"),
-      new ExpressionInfo(classOf[VectorL2Sq].getName, "vector_l2sq"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2,
-          s"vector_l2sq requires exactly 2 arguments, got ${exprs.length}")
-        VectorL2Sq(exprs(0), exprs(1))
-      }))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("winnow_fingerprints"),
-      new ExpressionInfo(classOf[WinnowFingerprints].getName, "winnow_fingerprints"),
-      (exprs: Seq[Expression]) => {
-        def intLit(e: Expression, name: String): Int = e match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"winnow_fingerprints $name must be an integer literal, got $other")
-        }
-        WinnowFingerprints(exprs.head, intLit(exprs(1), "k"), intLit(exprs(2), "w"))
-      }))
-    // the round-7 bloom membership-prefilter pair, cluster-wide (Spark
-    // ships these for runtime join pruning but leaves them off the 4.1
-    // SQL registry — see functions/BloomFunctions)
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("bloom_filter_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "bloom_filter_agg"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2,
-          s"bloom_filter_agg requires exactly 2 arguments, got ${exprs.length}")
-        val items = exprs(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(n: Long, _) => n
-          case org.apache.spark.sql.catalyst.expressions.Literal(n: Int, _) => n.toLong
-          case other => throw new IllegalArgumentException(
-            s"bloom_filter_agg estimatedItems must be an integer literal, got $other")
-        }
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          exprs.head, items).toAggregateExpression()
-      }))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "might_contain"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2,
-          s"might_contain requires exactly 2 arguments, got ${exprs.length}")
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(exprs(0), exprs(1))
-      }))
   }
 }

@@ -1,12 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, EvalMode, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Fused cosine similarity over two float-array columns, as a native
@@ -28,9 +27,9 @@ case class CosineSimilarity(
     extends BinaryExpression {
 
   // Mirrors Divide's mode surface (Divide captures EvalMode at parse time;
-  // so does the SQL registration below): ANSI throws DIVIDE_BY_ZERO on a
-  // zero divisor — empty array, zero-norm, underflow — LEGACY and TRY
-  // return NULL. This keeps FuseCosineRule semantics-preserving in BOTH
+  // so does its SQL builder in BucketSqlFunctions): ANSI throws
+  // DIVIDE_BY_ZERO on a zero divisor — empty array, zero-norm, underflow —
+  // LEGACY and TRY return NULL. This keeps FuseCosineRule semantics-preserving in BOTH
   // modes, so the fusion also fires under Spark 4's ANSI default.
   private def failOnError: Boolean = evalMode == EvalMode.ANSI
 
@@ -916,16 +915,4 @@ object VectorFunctions {
   def argminNegCos(cands: Column, v: Column): Column =
     Bridge.column(VectorArgmin(Bridge.expression(cands), Bridge.expression(v),
       negCos = true))
-
-  /** Register `cosine_similarity(a, b)` for the SQL surface. Like Divide,
-    * the eval mode is captured from the session conf at PARSE time. */
-  def registerSql(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_similarity",
-      exprs => {
-        require(exprs.length == 2,
-          s"cosine_similarity requires exactly 2 arguments, got ${exprs.length}")
-        CosineSimilarity(exprs(0), exprs(1), EvalMode.fromSQLConf(SQLConf.get))
-      },
-      "built-in")
 }

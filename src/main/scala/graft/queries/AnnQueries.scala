@@ -442,11 +442,6 @@ object AnnQueries {
     (cb, update)
   }
 
-  /** Oracle twin of [[pqResidualSub]] + [[pqResidualTrain]] — CTE text
-    * from `cents`/`lists` (nests [[ivfListsSql]]) through the trained
-    * codebook `cb$PqTrainRounds` and final update `u$PqTrainRounds`.
-    * Round CTEs are MATERIALIZED (the r13 chained-CTE rule: DuckDB
-    * otherwise inlines the chain exponentially). */
   /** The [[PqTrainRounds]]-round per-subspace Lloyd chain as CTE text,
     * PREFIX-parameterized (r15): sources `${p}rsub` / `${p}cb0`, emits
     * `${p}a_k` / `${p}u_k` / `${p}cb_k` — the residual chain uses prefix
@@ -474,6 +469,11 @@ object AnnQueries {
          |  FROM ${p}u$k GROUP BY j, code)""".stripMargin
     }.mkString(",\n")
 
+  /** Oracle twin of [[pqResidualSub]] + [[pqResidualTrain]] — CTE text
+    * from `cents`/`lists` (nests [[ivfListsSql]]) through the trained
+    * codebook `cb$PqTrainRounds` and final update `u$PqTrainRounds`.
+    * Round CTEs are MATERIALIZED (the r13 chained-CTE rule: DuckDB
+    * otherwise inlines the chain exponentially). */
   private[queries] def pqResidualTrainSql: String = {
     val rounds = pqTrainRoundsSql("")
     s"""$ivfListsSql,

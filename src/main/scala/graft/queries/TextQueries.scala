@@ -88,23 +88,6 @@ object TextQueries {
     * corpus size). */
   private[queries] val NgramDfCap = 8
 
-  /** The MinHash+LSH near-dup PAIR pipeline (extracted r6 so the pair query
-    * and dedup_minhash_clusters share it): codegen'd signatures → banded
-    * equi-join candidates → exact-Jaccard verify at 0.5. Returns the
-    * UNSORTED (a_id, b_id, jacc) frame plus the shingle cache handle.
-    *
-    * The shingle set is cached: it feeds the signature pass AND both sides
-    * of the verify join — without it every branch re-runs the parquet scan
-    * + tokenize + shingle HOF (at cluster scale this is a
-    * persist(DISK_AND_MEMORY) of ~doc_count rows). Signatures are ONE
-    * codegen'd map-side expression (same rewrite as SimhashFingerprint):
-    * one md5 per shingle, the 8 "independent" hash functions are disjoint
-    * 4-hex-char digest slices (16-bit minhashes — plenty for banding,
-    * false band collisions are killed by the exact verify). No explode, no
-    * min-agg shuffle. `.filter(isNotNull)`: a null signature (empty/null
-    * shingle set) must VANISH from banding like the old min-agg's empty
-    * group — concat_ws skips nulls, so unfiltered null sigs would all
-    * collide on one degenerate band key (O(m²) spurious candidates). */
   /** All LSH band keys of the minhash signature column `sigs`, one md5 per
     * band — factored so the batch pair pipeline and the streaming
     * index/alert twin ([[graft.streaming.PriorityStreams.nearDupAlertStream]])
@@ -134,6 +117,23 @@ object TextQueries {
       .select(keep ++ Seq(col("shingles"), explode(bandKeysCol).as("bk")): _*)
   }
 
+  /** The MinHash+LSH near-dup PAIR pipeline (extracted r6 so the pair query
+    * and dedup_minhash_clusters share it): codegen'd signatures → banded
+    * equi-join candidates → exact-Jaccard verify at 0.5. Returns the
+    * UNSORTED (a_id, b_id, jacc) frame plus the shingle cache handle.
+    *
+    * The shingle set is cached: it feeds the signature pass AND both sides
+    * of the verify join — without it every branch re-runs the parquet scan
+    * + tokenize + shingle HOF (at cluster scale this is a
+    * persist(DISK_AND_MEMORY) of ~doc_count rows). Signatures are ONE
+    * codegen'd map-side expression (same rewrite as SimhashFingerprint):
+    * one md5 per shingle, the 8 "independent" hash functions are disjoint
+    * 4-hex-char digest slices (16-bit minhashes — plenty for banding,
+    * false band collisions are killed by the exact verify). No explode, no
+    * min-agg shuffle. `.filter(isNotNull)`: a null signature (empty/null
+    * shingle set) must VANISH from banding like the old min-agg's empty
+    * group — concat_ws skips nulls, so unfiltered null sigs would all
+    * collide on one degenerate band key (O(m²) spurious candidates). */
   private[graft] def minhashPairsWithHandle(
       s: org.apache.spark.sql.SparkSession,
       dir: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {

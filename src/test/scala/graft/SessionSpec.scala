@@ -1,7 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
 /** One way to build a SparkSession: the shared test session comes from
   * [[Session.local]], and no main builds its own, so per-main config drift
   * (core counts, missing UTC) cannot come back unnoticed. */
@@ -15,16 +13,8 @@ class SessionSpec extends SparkTestBase {
   }
 
   test("SparkSession.builder appears in src/main only in graft/Session.scala") {
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root),
-      s"src/main/scala not found from ${System.getProperty("user.dir")}")
-    val walk = java.nio.file.Files.walk(root)
-    val builders = try walk.iterator.asScala
-      .filter(p => p.toString.endsWith(".scala"))
-      .filter(p => java.nio.file.Files.readString(p).contains("SparkSession.builder"))
-      .map(p => root.relativize(p).toString.replace('\\', '/'))
-      .toSeq.sorted
-    finally walk.close()
+    val builders = SparkTestBase.scalaSources("src/main/scala")
+      .collect { case (file, text) if text.contains("SparkSession.builder") => file }
     assert(builders == Seq("graft/Session.scala"),
       s"build sessions through graft.Session.local, not SparkSession.builder: $builders")
   }

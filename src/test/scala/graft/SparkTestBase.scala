@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -47,4 +49,19 @@ object SparkTestBase {
   lazy val session: SparkSession = Session.local("graft-tests", cores = 4,
     confs = Map("spark.sql.warehouse.dir" ->
       java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
+
+  /** Every `.scala` file under `dir` (relative to the project root) as
+    * (path relative to `dir`, contents), sorted by path — for the specs
+    * that pin where a construct may appear in the sources. */
+  def scalaSources(dir: String): Seq[(String, String)] = {
+    val root = java.nio.file.Paths.get(dir)
+    assert(java.nio.file.Files.isDirectory(root),
+      s"$root not found from ${System.getProperty("user.dir")}")
+    val walk = java.nio.file.Files.walk(root)
+    try walk.iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString.replace('\\', '/') -> java.nio.file.Files.readString(p))
+      .toSeq.sorted
+    finally walk.close()
+  }
 }

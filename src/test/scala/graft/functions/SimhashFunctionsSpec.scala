@@ -68,7 +68,7 @@ class SimhashFunctionsSpec extends SparkTestBase {
   }
 
   test("SQL surface: registered text-hash functions match the Column API") {
-    BucketSqlFunctions.registerTextHash(spark)
+    BucketSqlFunctions.registerFunctions(spark)
     val df = Seq((1L, "a b c d e f g")).toDF("id", "text")
     df.createOrReplaceTempView("th_docs")
     val viaSql = spark.sql(
@@ -109,7 +109,7 @@ class SimhashFunctionsSpec extends SparkTestBase {
 
   test("SQL surface: bloom_filter_agg + might_contain match exact membership") {
     import spark.implicits._
-    BucketSqlFunctions.registerTextHash(spark)
+    BucketSqlFunctions.registerFunctions(spark)
     spark.range(1000).selectExpr("concat('k', id) AS s").createOrReplaceTempView("bl_all")
     spark.sql("SELECT s FROM bl_all WHERE length(s) <= 3").createOrReplaceTempView("bl_ref")
     spark.sql("SELECT bloom_filter_agg(xxhash64(s), 10000L) AS bf FROM bl_ref")

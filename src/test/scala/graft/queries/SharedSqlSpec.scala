@@ -1,7 +1,5 @@
 package graft.queries
 
-import scala.jdk.CollectionConverters._
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One builder per shared oracle sub-plan: the MinHash signature, the
@@ -19,15 +17,7 @@ class SharedSqlSpec extends AnyFunSuite {
       "LEFT JOIN a_$name a ON e.qid = a.qid AND e.cid = a.cid")
 
   test("shared oracle sub-plans are spelled out once under src/main/scala/graft/queries") {
-    val root = java.nio.file.Paths.get("src/main/scala/graft/queries")
-    assert(java.nio.file.Files.isDirectory(root),
-      s"$root not found from ${System.getProperty("user.dir")}")
-    val walk = java.nio.file.Files.walk(root)
-    val sources = try walk.iterator.asScala
-      .filter(p => p.toString.endsWith(".scala"))
-      .map(p => root.relativize(p).toString -> java.nio.file.Files.readString(p))
-      .toSeq
-    finally walk.close()
+    val sources = graft.SparkTestBase.scalaSources("src/main/scala/graft/queries")
     for ((what, marker) <- shared) {
       val hits = sources.flatMap { case (file, text) =>
         Iterator.iterate(text.indexOf(marker))(i => text.indexOf(marker, i + 1))
