@@ -68,8 +68,8 @@ object Bench {
         .split("\\s+").take(3).toSeq.map(_.toDouble)
       catch { case _: Throwable => Seq.empty }
     // Every unpartitioned window in the repo runs over a ≤k-row post-limit
-    // rank frame or a ≤ buckets×salts offsets aggregate (audited r6/r7 at
-    // the call sites) — WindowExec's single-partition warning is noise here
+    // rank frame (audited r6/r7 at the call sites) — WindowExec's
+    // single-partition warning is noise here
     // and would otherwise repeat hundreds of times per bench run.
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",

@@ -391,8 +391,8 @@ object Queries {
     // routeUniformNative, not route: whether a row is discarded depends ONLY
     // on its bucket (null → null pt, empty range → −1), never on the
     // round-robin counter — the shuffle-free UnsafeRow router gives the
-    // identical discarded set without the deterministic router's window
-    // passes. The input is pre-pruned to the two consumed columns so the
+    // identical discarded set without the deterministic router's counting
+    // job and per-task sort. The input is pre-pruned to the two consumed columns so the
     // parquet scan stays narrow (the router's per-row pass would otherwise
     // pin the full 6-column schema).
     "bucket_discarded" -> Q(

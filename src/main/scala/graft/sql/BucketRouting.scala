@@ -1,9 +1,11 @@
 package graft.sql
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, AttributeReference, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.IntegerType
 
 import graft.core.{BucketLayout, BucketPriorityConfig}
 import graft.functions.BucketSqlFunctions
@@ -30,22 +32,21 @@ import graft.functions.BucketSqlFunctions
   * depends on send order; distributed Spark has no global send order, so the
   * caller supplies an explicit ordering column (`seqCol`, e.g. `event_id`).
   * The uniformity invariant (≤1 message skew per partition within a bucket)
-  * is identical; the exact message→partition byte order is defined by
-  * `seqCol` instead of arrival time (SURVEY §7 risk register).
+  * is identical; the exact message→partition byte order is defined by the
+  * input's partitions and `seqCol` instead of arrival time (SURVEY §7 risk
+  * register).
   *
-  * Scale note (100 TB): [[route]] is deterministic AND scale-safe — the
-  * round-robin counter is computed with a window salted to
-  * `(bucket, hash(seq) mod S)` so each bucket spreads over S reducers
-  * instead of one, then per-salt offsets (a tiny broadcast aggregate)
-  * stitch the salt-local row numbers into one bijection 1..N per bucket.
-  * Any bijection yields the identical per-partition allocation (partition
-  * load is `(rn-1) % size` over a permutation of 1..N — multiset-invariant),
-  * so the reference's uniformity contract (≤1 skew within a bucket) holds
-  * exactly, while the row→partition map stays a pure function of the key
-  * and seq values. For shuffle-FREE routing of massive streams use
-  * [[routeUniform]], which round-robins per Spark task — the guarantee
+  * Scale note (100 TB): [[route]] deals in one narrow pass — no shuffle, no
+  * window, no join. Each task sorts its own rows by `seq` and keeps one
+  * counter per bucket, seeded with the bucket's row count in earlier tasks
+  * (a counting job over the same input supplies those counts, the
+  * `zipWithIndex` pattern), so the tasks together deal each bucket a
+  * bijection onto 1..N and the reference's uniformity contract (≤1 skew
+  * within a bucket) holds exactly. [[routeUniformNative]] runs the same
+  * operator with per-task seeds and no counting job — the guarantee
   * profile of the reference under concurrent producer threads (its
-  * AtomicInteger order is scheduling-dependent too).
+  * AtomicInteger order is scheduling-dependent too); [[routeUniform]] is
+  * its Row-level twin, which the streaming router calls.
   */
 object BucketRouting {
 
@@ -55,83 +56,45 @@ object BucketRouting {
   def bucketOf(key: Column, cfg: BucketPriorityConfig): Column =
     Bridge.column(BucketSqlFunctions.bucketOfExpr(Bridge.expression(key), cfg))
 
-  /** Chained CASE over the (tiny) bucket list: bucket name → value. */
-  private def bucketCase[T](bucket: Column, mapping: Seq[(String, T)]): Column =
-    mapping.foldLeft(lit(null).cast("int")) { case (acc, (name, v)) =>
-      when(bucket === name, lit(v)).otherwise(acc)
-    }
-
   /** Deterministic priority routing.
     *
     * Adds `bucket` (nullable string) and `pt` (nullable int):
     *   - known bucket, non-empty range → assigned partition (round-robin over
-    *     the bucket's contiguous range, a deterministic function of `seqCol`);
+    *     the bucket's contiguous range);
     *   - known bucket, EMPTY range     → −1 (to be discarded);
     *   - no bucket                     → null (engine-default placement).
     *
-    * Two-level salted counter (no by-bucket single-reducer window): rows get
-    * a salt `pmod(hash(seq), salts)`, a `row_number` window runs per
-    * `(bucket, salt)` — S reducers per bucket — and per-salt offsets from a
-    * tiny `(bucket, salt) → count` aggregate (≤ buckets×salts rows,
-    * broadcast) stitch the locals into a bijection 1..N per bucket. The
-    * per-partition allocation `(rn-1) % size` over any 1..N bijection is
-    * multiset-identical, so results match a global seq-ordered counter
-    * exactly; only the (unobservable) internal visit order differs. Costs
-    * one extra pass over the routed side for the count aggregate — the price
-    * of determinism at cluster scale; [[routeUniform]] is the zero-shuffle
-    * alternative when reproducibility isn't needed.
+    * Dealing: every input task sorts its rows by `seqCol` (a local sort, no
+    * exchange) and deals each bucket's rows in that order, starting at the
+    * bucket's row count in earlier tasks — so the tasks together give a
+    * bucket's n rows the ordinals 0..n−1 and partition `start + j` of a
+    * range of z receives ⌈n/z⌉ rows for j < n % z, else ⌊n/z⌋: the counts
+    * of one global counter, ≤1 skew. The earlier tasks' counts come from a
+    * counting job over the same input when the plan executes; building the
+    * frame runs nothing.
+    *
+    * Determinism contract: the output is a pure function of the input's
+    * partitions (which rows each holds, in partition order) and their
+    * `seqCol` values. Rows with equal `seqCol` in one task may take either
+    * order. The input must yield the same rows on every evaluation: a task
+    * that deals a different number of rows of some bucket than the counting
+    * job counted fails with an `IllegalStateException` naming `route`.
+    * Streaming input is rejected — route a stream with
+    * [[graft.streaming.PriorityStreams.routeStream]].
+    *
+    * Re-entrant: a frame that already carries `bucket` and `pt` is routed
+    * again, `bucket` replaced in place and `pt` recomputed.
     */
   def route(
       df: DataFrame,
       cfg: BucketPriorityConfig,
       numPartitions: Int,
       keyCol: Column,
-      seqCol: Column,
-      salts: Int = 16
+      seqCol: Column
   ): DataFrame = {
-    require(salts >= 1, s"salts must be >= 1: $salts")
-    val SaltCol = "__graft_route_salt"
-    val RnCol = "__graft_route_rn"
-    val OffCol = "__graft_route_off"
-    Seq(SaltCol, RnCol, OffCol).foreach(c =>
-      require(!df.columns.contains(c), s"input must not carry internal column $c"))
-    val ranges = BucketLayout.ranges(cfg, numPartitions) // (name,(start,size))
-    val bucket = bucketOf(keyCol, cfg)
-    val withSalt = df
-      .withColumn("bucket", bucket)
-      .withColumn(SaltCol, pmod(hash(seqCol), lit(salts)))
-    val start = bucketCase(col("bucket"), ranges.map { case (n, (s, _)) => (n, s) })
-    val size = bucketCase(col("bucket"), ranges.map { case (n, (_, z)) => (n, z) })
-    val localRn = row_number()
-      .over(Window.partitionBy(col("bucket"), col(SaltCol)).orderBy(seqCol))
-    // Per-(bucket, salt) counts → exclusive running offset within the bucket.
-    // The window below runs over the AGGREGATE (≤ buckets×salts rows), not
-    // the data — single-partition there is fine.
-    val offsets = withSalt
-      .filter(col("bucket").isNotNull)
-      .groupBy(col("bucket"), col(SaltCol)).agg(count(lit(1)).as("__cnt"))
-      .withColumn(
-        OffCol,
-        coalesce(
-          sum(col("__cnt")).over(
-            Window.partitionBy(col("bucket")).orderBy(col(SaltCol))
-              .rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-      .select(col("bucket"), col(SaltCol), col(OffCol))
-    // final projection from withSalt's column list (not df's): withColumn
-    // semantics are preserved whether "bucket" was appended or replaced a
-    // pre-existing column in place, so re-routing a routed frame stays legal
-    val outCols =
-      withSalt.columns.filterNot(c => c == SaltCol || c == "pt").map(col) :+ col("pt")
-    withSalt
-      .withColumn(RnCol, localRn)
-      .join(broadcast(offsets), Seq("bucket", SaltCol), "left")
-      .withColumn(
-        "pt",
-        when(col("bucket").isNull, lit(null).cast("int"))
-          .when(size === 0, lit(-1))
-          .otherwise((start + (col(OffCol) + col(RnCol) - lit(1)) % size).cast("int")))
-      .select(outCols: _*)
+    require(!df.isStreaming,
+      "route deals over a bounded input; route a stream with PriorityStreams.routeStream")
+    assignPartitions(df, cfg, numPartitions, keyCol, Some(seqCol))
   }
 
   /** Shuffle-free routing for cluster scale: one round-robin counter per
@@ -184,26 +147,31 @@ object BucketRouting {
   /** [[routeUniform]] as a first-class Catalyst operator (§2.5 preference
     * (c)): same per-(task, bucket) counter semantics, but executed by
     * [[graft.plans.AssignPartitionsExec]] directly over `UnsafeRow`s —
-    * no Row encoder round-trip. Registers [[graft.plans.GraftStrategy]] on
-    * the session idempotently (or use `GraftExtensions` cluster-wide). */
+    * no Row encoder round-trip. */
   def routeUniformNative(
       df: DataFrame,
       cfg: BucketPriorityConfig,
       numPartitions: Int,
       keyCol: Column
+  ): DataFrame = assignPartitions(df, cfg, numPartitions, keyCol, None)
+
+  /** `df` with `bucket` and `pt` added by [[graft.plans.AssignPartitions]],
+    * dealt in `dealBy` order when given (the counter's seed, see there).
+    * Registers [[graft.plans.GraftStrategy]] on the session idempotently (or
+    * use `GraftExtensions` cluster-wide). An input `pt` is dropped first, so
+    * a routed frame can be routed again. */
+  private def assignPartitions(
+      df: DataFrame,
+      cfg: BucketPriorityConfig,
+      numPartitions: Int,
+      keyCol: Column,
+      dealBy: Option[Column]
   ): DataFrame = {
     val spark = df.sparkSession
-    // synchronized check-then-append: two concurrent callers racing here
-    // could otherwise each read the same list and one would overwrite the
-    // other's (or a user's concurrently-added) strategy
-    spark.experimental.synchronized {
-      if (!spark.experimental.extraStrategies.contains(graft.plans.GraftStrategy))
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ graft.plans.GraftStrategy
-    }
+    graft.plans.GraftStrategy.register(spark)
     val ranges: Map[String, (Int, Int)] = BucketLayout.ranges(cfg, numPartitions).toMap
-    val withBucket = df.withColumn("bucket", bucketOf(keyCol, cfg))
-    val childPlan = org.apache.spark.sql.graftbridge.Bridge.logicalPlan(withBucket)
+    val withBucket = df.drop("pt").withColumn("bucket", bucketOf(keyCol, cfg))
+    val childPlan = Bridge.logicalPlan(withBucket)
     // resolve the attribute withColumn just produced: exact name when unique
     // (withColumn guarantees one column named "bucket" whether it appended
     // or replaced); positional last as the fallback for resolvers that kept
@@ -216,10 +184,14 @@ object BucketRouting {
           s"cannot locate the routed bucket column in ${childPlan.output.map(_.name)}")
         last
     }
-    val ptAttr = org.apache.spark.sql.catalyst.expressions.AttributeReference(
-      "pt", org.apache.spark.sql.types.IntegerType, nullable = true)()
-    org.apache.spark.sql.graftbridge.Bridge.ofRows(spark,
-      graft.plans.AssignPartitions(ranges, bucketAttr, ptAttr, childPlan))
+    // the order expression resolved against the same child plan
+    val dealOrder = dealBy.map { c =>
+      val Project(Seq(e), _) = Bridge.logicalPlan(withBucket.select(c)): @unchecked
+      SortOrder(e match { case Alias(inner, _) => inner; case a => a }, Ascending)
+    }
+    val ptAttr = AttributeReference("pt", IntegerType, nullable = true)()
+    Bridge.ofRows(spark,
+      graft.plans.AssignPartitions(ranges, bucketAttr, ptAttr, dealOrder, childPlan))
   }
 
   /** `discard` fallback: keep only routable rows (documented intent of

@@ -1310,7 +1310,7 @@ object PriorityStreams {
       val (last, emitted) = st.get()
       // stale-timer guard: only the CURRENT week's deadline may fire (a
       // resurrection deletes + re-arms, but defend in depth)
-      if (emitted || expiredTimerInfo.getExpiryTimeInMs < (last + 14) * 86400000L)
+      if (emitted || expiredTimerInfo.getExpiryTimeInMs() < (last + 14) * 86400000L)
         Iterator.empty
       else {
         st.update((last, true))

@@ -30,15 +30,18 @@ trait SparkTestBase extends AnyFunSuite {
     withConfs("spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 
-  /** Every file scan in an executed plan, walking through AQE's adaptive
-    * and query-stage wrappers (a plan that shuffles hides its scans
+  /** Every operator of an executed plan, walking through AQE's adaptive
+    * and query-stage wrappers (a plan that shuffles hides its operators
     * behind them). */
-  def fileScans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-    case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan)
-    case q: QueryStageExec        => fileScans(q.plan)
-    case s: FileSourceScanExec    => Seq(s)
-    case other                    => other.children.flatMap(fileScans)
+  def planNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case q: QueryStageExec        => planNodes(q.plan)
+    case other                    => other +: other.children.flatMap(planNodes)
   }
+
+  /** Every file scan in an executed plan. */
+  def fileScans(p: SparkPlan): Seq[FileSourceScanExec] =
+    planNodes(p).collect { case s: FileSourceScanExec => s }
 
   /** How many scans of the `documents` table the executed plan carries. */
   def docScanCount(qe: QueryExecution): Int = fileScans(qe.executedPlan)

@@ -1401,7 +1401,7 @@ class R8OpsSpec extends SparkTestBase {
         v -> (sorted.indexWhere(_ == v) + 1 + sorted.lastIndexWhere(_ == v) + 1).toLong
       }.toMap
     }
-    val mx = mid2(docs.map(_._1)); val my = mid2(docs.map(_._2))
+    val mx = mid2(docs.map(_._1).toIndexedSeq); val my = mid2(docs.map(_._2).toIndexedSeq)
     val xs = docs.map(d => BigInt(mx(d._1))); val ys = docs.map(d => BigInt(my(d._2)))
     val sx = xs.sum; val sy = ys.sum
     val sxy = xs.zip(ys).map { case (a, b) => a * b }.sum

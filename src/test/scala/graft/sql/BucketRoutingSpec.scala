@@ -179,28 +179,30 @@ class BucketRoutingSpec extends SparkTestBase {
     assert(counts == Map("B1" -> 8L, "B2" -> 8L))
   }
 
-  // The salted router's output contract in closed form: for a bucket with n
-  // messages and a range of z partitions, ANY bijection rn: rows → 1..n
-  // gives partition start+j exactly ceil((n-j)/z)-at-j counts — i.e. the
-  // first (n % z) partitions of the range get ⌈n/z⌉, the rest ⌊n/z⌋. This
-  // property pins that against random allocations/partition counts/loads,
-  // so a future rewrite can't silently change the allocation pattern.
-  test("property: salted route per-partition counts match the closed-form round-robin model") {
+  // route's output contract in closed form: for a bucket with n messages
+  // and a range of z partitions, ANY bijection rn: rows → 1..n gives
+  // partition start+j exactly ceil((n-j)/z)-at-j counts — i.e. the first
+  // (n % z) partitions of the range get ⌈n/z⌉, the rest ⌊n/z⌋. This property
+  // pins that against random allocations/partition counts/loads and input
+  // partitionings (route deals per input task, so the tasks' seeds must
+  // stitch into one bijection), so a future rewrite can't silently change
+  // the allocation pattern.
+  test("property: route per-partition counts match the closed-form round-robin model") {
     import org.scalacheck.{Gen, Prop, Test => SCTest}
     val genCase = for {
       nBuckets <- Gen.choose(1, 4)
       cuts <- Gen.pick(nBuckets - 1, 1 until 100)
       parts <- Gen.choose(nBuckets, 16)
       loads <- Gen.listOfN(nBuckets, Gen.choose(0, 40))
-      salts <- Gen.oneOf(1, 3, 16)
+      inputParts <- Gen.oneOf(1, 3, 16)
     } yield {
       // composition of 100 into nBuckets positive parts (allocations must
       // sum to exactly 100 by config contract)
       val sorted = cuts.toList.sorted
       val allocs = (sorted :+ 100).zip(0 :: sorted).map { case (b, a) => b - a }
-      (allocs, parts, loads, salts)
+      (allocs, parts, loads, inputParts)
     }
-    val p = Prop.forAll(genCase) { case (allocs, parts, loads, salts) =>
+    val p = Prop.forAll(genCase) { case (allocs, parts, loads, inputParts) =>
       val names = allocs.indices.map(i => s"P$i")
       BucketPriorityConfig("t", names, allocs).toOption match {
         case None => false // a composition of 100 must always be valid
@@ -210,9 +212,9 @@ class BucketRoutingSpec extends SparkTestBase {
           }.zipWithIndex.map { case ((k, b), seq) => (k, b, seq.toLong) }
           if (rows.isEmpty) true
           else {
-            val routed = BucketRouting.route(
-              rows.toDF("key", "expected_bucket", "seq"), cfg, parts,
-              col("key"), col("seq"), salts)
+            val input = rows.toDF("key", "expected_bucket", "seq")
+              .repartition(inputParts, col("key"))
+            val routed = BucketRouting.route(input, cfg, parts, col("key"), col("seq"))
             val got = BucketRouting.discard(routed).groupBy("bucket", "pt").count()
               .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
             val ranges = graft.core.BucketLayout.ranges(cfg, parts).toMap
@@ -231,6 +233,56 @@ class BucketRoutingSpec extends SparkTestBase {
     assert(res.passed, res.status.toString)
   }
 
+  private def keySeqPt(df: org.apache.spark.sql.DataFrame) =
+    df.select("key", "seq", "pt").collect()
+      .map(r => (r.getString(0), r.getLong(1), if (r.isNullAt(2)) null else r.getInt(2)))
+      .sortBy(x => (x._1, x._2)).toSeq
+
+  test("route is deterministic: the same partitioned input routed twice gives identical rows") {
+    val input = msgs(50, "B1", "B2", "Nope").repartition(3, col("key"))
+    val first = keySeqPt(BucketRouting.route(input, c8020, 10, col("key"), col("seq")))
+    val second = keySeqPt(BucketRouting.route(input, c8020, 10, col("key"), col("seq")))
+    assert(first.size == 150)
+    assert(first == second)
+  }
+
+  test("route plans one narrow pass: no window, no broadcast, no shuffle below the router") {
+    val sink = BucketRouting.discard(
+      BucketRouting.route(msgs(32, "B1", "B2"), c8020, 10, col("key"), col("seq")))
+      .groupBy("bucket", "pt").count()
+    assert(sink.collect().map(_.getLong(2)).sum == 64)
+    val nodes = planNodes(sink.queryExecution.executedPlan)
+    val routers = nodes.collect { case a: graft.plans.AssignPartitionsExec => a }
+    assert(routers.size == 1, nodes.map(_.nodeName))
+    assert(!nodes.exists(_.isInstanceOf[org.apache.spark.sql.execution.window.WindowExec]))
+    assert(!nodes.exists(_.isInstanceOf[org.apache.spark.sql.execution.exchange.BroadcastExchangeExec]))
+    val below = planNodes(routers.head.child)
+    assert(!below.exists(_.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec]),
+      below.map(_.nodeName))
+  }
+
+  test("route fails when its input yields different rows on a second evaluation") {
+    // the counting pass sees every key in B1, the dealing pass every key in B2
+    BucketRoutingSpec.evaluations.set(0)
+    val drifting = udf { (i: Long) =>
+      if (BucketRoutingSpec.evaluations.getAndIncrement() < 64) s"B1-$i" else s"B2-$i"
+    }.asNondeterministic()
+    val input = spark.range(0, 64, 1, 2).toDF("seq").withColumn("key", drifting(col("seq")))
+    val routed = BucketRouting.route(input, c8020, 10, col("key"), col("seq"))
+    val e = intercept[Exception](routed.collect())
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(t => t.isInstanceOf[IllegalStateException] &&
+      t.getMessage.startsWith("route:")) || e.getMessage.contains("IllegalStateException: route:"),
+      chain.map(_.toString).mkString("\n"))
+  }
+
+  test("route rejects a streaming input") {
+    val stream = spark.readStream.format("rate").load().withColumn("key", lit("B1-x"))
+    val e = intercept[IllegalArgumentException](
+      BucketRouting.route(stream, c8020, 10, col("key"), col("value")))
+    assert(e.getMessage.contains("routeStream"), e.getMessage)
+  }
+
   test("routeUniform keeps <=1 skew per partition within each bucket") {
     val routed = BucketRouting.routeUniform(msgs(32, "B1", "B2"), c8020, 10, col("key"))
     val counts = routed.groupBy("bucket", "pt").count()
@@ -243,4 +295,9 @@ class BucketRoutingSpec extends SparkTestBase {
     assert(counts.filter(_._1 == "B1").forall(c => c._2 >= 0 && c._2 <= 7))
     assert(counts.filter(_._1 == "B2").forall(c => c._2 >= 8 && c._2 <= 9))
   }
+}
+
+object BucketRoutingSpec {
+  /** Evaluations of the drifting key in the input-determinism test. */
+  val evaluations = new java.util.concurrent.atomic.AtomicLong
 }
