@@ -67,14 +67,6 @@ object Bench {
       try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
         .split("\\s+").take(3).toSeq.map(_.toDouble)
       catch { case _: Throwable => Seq.empty }
-    // Every unpartitioned window in the repo runs over a ≤k-row post-limit
-    // rank frame (audited r6/r7 at the call sites) — WindowExec's
-    // single-partition warning is noise here
-    // and would otherwise repeat hundreds of times per bench run.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
-
     // Warm-up: touch every table (file listing + footer reads + codegen of a
     // trivial agg) and run one light query end-to-end.
     Tables.names.foreach(n => Tables.load(spark, sfDir, n).count())

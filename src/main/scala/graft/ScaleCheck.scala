@@ -40,9 +40,6 @@ object ScaleCheck {
       if (args.length > 1) args.drop(1).toSeq else TailQueries
     val runs = sys.env.getOrElse("SPARK_GRAFT_SCALE_RUNS", "2").toInt
     val spark = Session.local("graft-scale-check")
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
 
     // warm-up: table footers + one light query
     Seq("documents", "embeddings").foreach(t => Tables.load(spark, sfDir, t).count())

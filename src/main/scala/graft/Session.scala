@@ -12,8 +12,8 @@ object Session {
     .map(_.trim.toInt).getOrElse(Runtime.getRuntime.availableProcessors)
 
   /** A `local[cores]` session with `cores` shuffle partitions, UTC session
-    * time, the UI off and WARN logging. `confs` are applied last, so they
-    * may override any of these. */
+    * time, the UI off and WARN logging, WindowExec's at ERROR. `confs` are
+    * applied last, so they may override any of the confs. */
   def local(app: String, cores: Int = defaultCores,
       confs: Map[String, String] = Map.empty): SparkSession = {
     val spark = SparkSession.builder()
@@ -25,6 +25,12 @@ object Session {
       .config(confs)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // Every unpartitioned window in the repo runs over a ≤k-row post-limit
+    // rank frame (audited at the call sites), so WindowExec's "No Partition
+    // Defined" warning is noise that would repeat hundreds of times a run.
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
     spark
   }
 }

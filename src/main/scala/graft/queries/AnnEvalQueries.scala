@@ -802,15 +802,8 @@ object AnnEvalQueries {
           .orderBy("method", "subspace")
       },
       oracle = Some {
-        // each trained method's encode: every slice of `src` to its nearest
-        // codeword of `cb`, keeping the squared error
-        def resEnc(src: String, cb: String) =
-          s"""SELECT cid, j, d2 FROM (
-             |    SELECT r.cid, r.j, ${duckL2Double("r.rsub", "c.centv")} AS d2,
-             |           ROW_NUMBER() OVER (PARTITION BY r.cid, r.j
-             |                              ORDER BY ${duckL2Double("r.rsub", "c.centv")}, c.code) AS crk
-             |    FROM $src r JOIN $cb c ON r.j = c.j) t
-             |  WHERE crk = 1""".stripMargin
+        // each trained method's encode, keeping the squared error
+        def resEnc(src: String, cb: String) = nearestCodeSql(src, cb, "cid", "j", "d2")
         val u = Seq(
           "raw_pq" -> "SELECT cid, j, d2 FROM rawenc",
           "residual_init" -> resEnc("rsub", "cb0"),

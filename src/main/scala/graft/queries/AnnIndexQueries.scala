@@ -369,14 +369,8 @@ object AnnIndexQueries {
       oracle = Some {
         "WITH " + AnnQueries.pqResidualTrainSql + s""",
           |resenc AS (
-          |  SELECT cid, j, d2 FROM (
-          |    SELECT r.cid, r.j,
-          |           CAST(floor((${SimilarityQueries.duckL2Double("r.rsub", "c.centv")}) * 1000000.0)
-          |                / 1000000.0 AS DECIMAL(16,6)) AS d2,
-          |           ROW_NUMBER() OVER (PARTITION BY r.cid, r.j
-          |                              ORDER BY ${SimilarityQueries.duckL2Double("r.rsub", "c.centv")}, c.code) AS crk
-          |    FROM rsub r JOIN cb${AnnQueries.PqTrainRounds} c ON r.j = c.j) t
-          |  WHERE crk = 1),
+          |  ${AnnQueries.nearestCodeSql("rsub", s"cb${AnnQueries.PqTrainRounds}", "cid", "j",
+                 "CAST(floor(d2 * 1000000.0) / 1000000.0 AS DECIMAL(16,6)) AS d2")}),
           |pv AS (
           |  SELECT e.cid, CAST(SUM(e.d2) AS DECIMAL(20,6)) AS vd2, l.list_id,
           |         CASE WHEN e.cid % 10 = 7 THEN 1 ELSE 0 END AS is_new

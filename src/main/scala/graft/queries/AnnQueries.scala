@@ -442,6 +442,18 @@ object AnnQueries {
     (cb, update)
   }
 
+  /** The oracle's trained residual-PQ encode: every `rsub` slice of `src`
+    * to its nearest codeword of `cb` (ties to the lower code), as SELECT
+    * text. `keep` is the outer select list over the winning row's `cid`,
+    * `j`, `code`, `rsub` and its squared error `d2`. */
+  private[queries] def nearestCodeSql(src: String, cb: String, keep: String*): String =
+    s"""SELECT ${keep.mkString(", ")} FROM (
+       |    SELECT r.cid, r.j, c.code, r.rsub, ${duckL2Double("r.rsub", "c.centv")} AS d2,
+       |           ROW_NUMBER() OVER (PARTITION BY r.cid, r.j
+       |                              ORDER BY ${duckL2Double("r.rsub", "c.centv")}, c.code) AS rk
+       |    FROM $src r JOIN $cb c ON r.j = c.j) t
+       |  WHERE rk = 1""".stripMargin
+
   /** The [[PqTrainRounds]]-round per-subspace Lloyd chain as CTE text,
     * PREFIX-parameterized (r15): sources `${p}rsub` / `${p}cb0`, emits
     * `${p}a_k` / `${p}u_k` / `${p}cb_k` — the residual chain uses prefix
@@ -451,12 +463,7 @@ object AnnQueries {
   private[queries] def pqTrainRoundsSql(p: String): String =
     (1 to PqTrainRounds).map { k =>
       s"""${p}a$k AS MATERIALIZED (
-         |  SELECT cid, j, code, rsub FROM (
-         |    SELECT r.cid, r.j, c.code, r.rsub,
-         |           ROW_NUMBER() OVER (PARTITION BY r.cid, r.j
-         |                              ORDER BY ${duckL2Double("r.rsub", "c.centv")}, c.code) AS rk
-         |    FROM ${p}rsub r JOIN ${p}cb${k - 1} c ON r.j = c.j) t
-         |  WHERE rk = 1),
+         |  ${nearestCodeSql(s"${p}rsub", s"${p}cb${k - 1}", "cid", "j", "code", "rsub")}),
          |${p}u$k AS MATERIALIZED (
          |  SELECT j, code, CAST(u.i - 1 AS INTEGER) AS dim,
          |         CAST(COUNT(*) AS BIGINT) AS n,
@@ -576,12 +583,7 @@ object AnnQueries {
   private[queries] def ivfPqResidualDistSql: String =
     s"""$pqResidualTrainSql,
        |codes AS MATERIALIZED (
-       |  SELECT cid, j, code FROM (
-       |    SELECT r.cid, r.j, c.code,
-       |           ROW_NUMBER() OVER (PARTITION BY r.cid, r.j
-       |                              ORDER BY ${duckL2Double("r.rsub", "c.centv")}, c.code) AS rk
-       |    FROM rsub r JOIN cb$PqTrainRounds c ON r.j = c.j) t
-       |  WHERE rk = 1),
+       |  ${nearestCodeSql("rsub", s"cb$PqTrainRounds", "cid", "j", "code")}),
        |probes AS (
        |  SELECT qid, cent_id AS list_id FROM (
        |    SELECT q.vec_id AS qid, c.cent_id,

@@ -98,6 +98,28 @@ object TextQueries {
         col("sigs").getItem(2 * b), col("sigs").getItem(2 * b + 1)))
     }: _*)
 
+  /** The Spark-side shingle frame: `docs` with `text` split on spaces,
+    * documents under 3 tokens dropped, projected to `keep` plus the native
+    * 3-token `shingles` set. Every minhash and n-gram query shingles here,
+    * so none can tokenize differently from its peers. */
+  private[graft] def shingled(docs: org.apache.spark.sql.DataFrame,
+      keep: String*): org.apache.spark.sql.DataFrame =
+    docs
+      .withColumn("toks", split(col("text"), " "))
+      .filter(size(col("toks")) >= 3)
+      .withColumn("shingles", graft.functions.ShingleFunctions.shingleSet(col("toks")))
+      .select((keep :+ "shingles").map(col): _*)
+
+  /** Every column of a [[shingled]] frame plus its minhash signature `sigs`.
+    * A null signature (empty/null shingle set) is dropped: concat_ws skips
+    * nulls, so unfiltered null sigs would all collide on one degenerate
+    * band key (O(m²) spurious candidates). */
+  private[graft] def signatures(
+      sh: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    sh.withColumn("sigs",
+        graft.functions.MinhashFunctions.minhashSignature(col("shingles")))
+      .filter(col("sigs").isNotNull)
+
   /** Banded minhash signature frame over any (doc_id, text, ...) input:
     * every original column is kept, plus the `shingles` set and the
     * exploded band key `bk`. Stateless projections only, so it applies
@@ -106,15 +128,9 @@ object TextQueries {
     * makes online dedup against the index sound. */
   private[graft] def bandedSignatures(
       docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val keep = docs.columns.map(col).toSeq
-    docs
-      .withColumn("toks", split(col("text"), " "))
-      .filter(size(col("toks")) >= 3)
-      .withColumn("shingles", graft.functions.ShingleFunctions.shingleSet(col("toks")))
-      .withColumn("sigs",
-        graft.functions.MinhashFunctions.minhashSignature(col("shingles")))
-      .filter(col("sigs").isNotNull)
-      .select(keep ++ Seq(col("shingles"), explode(bandKeysCol).as("bk")): _*)
+    val keep = docs.columns.toSeq
+    signatures(shingled(docs, keep: _*))
+      .select((keep :+ "shingles").map(col) :+ explode(bandKeysCol).as("bk"): _*)
   }
 
   /** The MinHash+LSH near-dup PAIR pipeline (extracted r6 so the pair query
@@ -130,25 +146,13 @@ object TextQueries {
     * one md5 per shingle, the 8 "independent" hash functions are disjoint
     * 4-hex-char digest slices (16-bit minhashes — plenty for banding,
     * false band collisions are killed by the exact verify). No explode, no
-    * min-agg shuffle. `.filter(isNotNull)`: a null signature (empty/null
-    * shingle set) must VANISH from banding like the old min-agg's empty
-    * group — concat_ws skips nulls, so unfiltered null sigs would all
-    * collide on one degenerate band key (O(m²) spurious candidates). */
+    * min-agg shuffle; null signatures never reach banding ([[signatures]]). */
   private[graft] def minhashPairsWithHandle(
       s: org.apache.spark.sql.SparkSession,
       dir: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val sh = Tables.load(s, dir, "documents")
-      .withColumn("toks", split(col("text"), " "))
-      .filter(size(col("toks")) >= 3)
-      .withColumn("shingles", graft.functions.ShingleFunctions.shingleSet(col("toks")))
-      .select("doc_id", "shingles")
-      .cache()
-    val withSig = sh.select(col("doc_id"),
-        graft.functions.MinhashFunctions.minhashSignature(col("shingles")).as("sigs"))
-      .filter(col("sigs").isNotNull)
+    val sh = shingled(Tables.load(s, dir, "documents"), "doc_id").cache()
     // all band keys in ONE pass over the signatures (shared bandKeysCol)
-    val bands = withSig.select(col("doc_id"),
-        explode(bandKeysCol).as("bk"))
+    val bands = signatures(sh).select(col("doc_id"), explode(bandKeysCol).as("bk"))
     val cand = bands.as("x").join(bands.as("y"), Seq("bk"))
       .filter(col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
@@ -1255,21 +1259,15 @@ object TextQueries {
     // the four joins back are doc_id-keyed; per-pair work is O(shingles).
     "minhash_est_error" -> Q(
       fn = (s, dir) => {
-        val sh = Tables.load(s, dir, "documents")
-          .withColumn("toks", split(col("text"), " "))
-          .filter(size(col("toks")) >= 3)
-          .withColumn("shingles", graft.functions.ShingleFunctions.shingleSet(col("toks")))
-          .select("doc_id", "shingles")
-          .cache() // query-scoped (see Q's cache-lifecycle contract)
+        // query-scoped cache (see Q's cache-lifecycle contract)
+        val sh = shingled(Tables.load(s, dir, "documents"), "doc_id").cache()
         // r16 batch 3: withSig feeds FOUR branches (both band self-join
         // sides + the two signature-carrier joins), each recomputing the
         // 8-hash minhash signature above the shingle cache (ReuseCheck: 12
         // executed scans, 0 reused — the join sides broadcast, so there is
         // no exchange to reuse). Materialize the doc-sized signature frame
         // once; every consumer reads the checkpoint.
-        val withSig = Q.truncate(sh.select(col("doc_id"),
-            graft.functions.MinhashFunctions.minhashSignature(col("shingles")).as("sigs"))
-          .filter(col("sigs").isNotNull))
+        val withSig = Q.truncate(signatures(sh).select("doc_id", "sigs"))
         val bands = withSig.select(col("doc_id"), explode(bandKeysCol).as("bk"))
         val cand = bands.as("x").join(bands.as("y"), Seq("bk"))
           .filter(col("x.doc_id") < col("y.doc_id"))
@@ -1450,19 +1448,12 @@ object TextQueries {
     // dedup family, never all-pairs) → a 4-row agg.
     "band_effectiveness" -> Q(
       fn = (s, dir) => {
-        val sh = Tables.load(s, dir, "documents")
-          .withColumn("toks", split(col("text"), " "))
-          .filter(size(col("toks")) >= 3)
-          .withColumn("shingles", graft.functions.ShingleFunctions.shingleSet(col("toks")))
-          .select("doc_id", "shingles")
-          .cache()
+        val sh = shingled(Tables.load(s, dir, "documents"), "doc_id").cache()
         // r16 batch 3: both self-join sides recomputed the 8-hash minhash
         // signature above the shingle cache (broadcast join — no exchange
         // to reuse; ReuseCheck: 8 executed scans, 0 reused). Materialize
         // the doc-sized banded frame once; the join reads the checkpoint.
-        val bands = Q.truncate(sh.select(col("doc_id"),
-            graft.functions.MinhashFunctions.minhashSignature(col("shingles")).as("sigs"))
-          .filter(col("sigs").isNotNull)
+        val bands = Q.truncate(signatures(sh)
           .select(col("doc_id"), posexplode(bandKeysCol))
           .toDF("doc_id", "band", "bk"))
         val cand = bands.as("x").join(bands.as("y"), Seq("bk"))
@@ -1518,19 +1509,12 @@ object TextQueries {
     // aggregate.
     "jaccard_threshold_curve" -> Q(
       fn = (s, dir) => {
-        val sh = Tables.load(s, dir, "documents")
-          .withColumn("toks", split(col("text"), " "))
-          .filter(size(col("toks")) >= 3)
-          .withColumn("shingles", graft.functions.ShingleFunctions.shingleSet(col("toks")))
-          .select("doc_id", "shingles")
-          .cache()
+        val sh = shingled(Tables.load(s, dir, "documents"), "doc_id").cache()
         // r16 batch 3: both self-join sides recomputed the 8-hash minhash
         // signature above the shingle cache (broadcast join — no exchange
         // to reuse; ReuseCheck: 8 executed scans, 0 reused). Materialize
         // the doc-sized banded frame once; the join reads the checkpoint.
-        val bands = Q.truncate(sh.select(col("doc_id"),
-            graft.functions.MinhashFunctions.minhashSignature(col("shingles")).as("sigs"))
-          .filter(col("sigs").isNotNull)
+        val bands = Q.truncate(signatures(sh)
           .select(col("doc_id"), explode(bandKeysCol).as("bk")))
         val cand = bands.as("x").join(bands.as("y"), Seq("bk"))
           .filter(col("x.doc_id") < col("y.doc_id"))
@@ -2008,20 +1992,10 @@ object TextQueries {
         // banding). One corpus-derived candidate pass and its
         // distinct/join shuffles removed at any scale; truth side
         // unchanged.
-        val sh = Tables.load(s, dir, "documents")
-          .withColumn("toks", split(col("text"), " "))
-          .filter(size(col("toks")) >= 3)
-          .withColumn("shingles",
-            graft.functions.ShingleFunctions.shingleSet(col("toks")))
-          .select("doc_id", "shingles")
-          .cache()
+        val sh = shingled(Tables.load(s, dir, "documents"), "doc_id").cache()
         val truth = ngramJaccardPairs(sh.withColumn("source", lit("_")), 32, 0.5)
           .select(col("a_id"), col("b_id"), col("jacc"))
-        val bks = sh.select(col("doc_id"),
-            graft.functions.MinhashFunctions.minhashSignature(col("shingles"))
-              .as("sigs"))
-          .filter(col("sigs").isNotNull)
-          .select(col("doc_id"), bandKeysCol.as("bks"))
+        val bks = signatures(sh).select(col("doc_id"), bandKeysCol.as("bks"))
         // LEFT joins + null-safe overlap: a doc absent from banding (the
         // null-sigs guard) must keep its truth row with hit = 0, exactly
         // like the old left join against the pair set
@@ -2187,12 +2161,8 @@ object TextQueries {
         // shingles are counted back in via per-doc hot lists (see
         // [[ngramJaccardPairs]]) — so the cap only bounds candidate
         // generation and the uncapped oracle stays hash-identical.
-        val sh = Tables.load(s, dir, "documents")
-          .withColumn("toks", split(col("text"), " "))
-          .filter(size(col("toks")) >= 3)
-          .withColumn("shingles", graft.functions.ShingleFunctions.shingleSet(col("toks")))
-          .select("doc_id", "source", "shingles")
-          .cache() // feeds sizes + both sides of the exploded self-join
+        // cached: feeds sizes + both sides of the exploded self-join
+        val sh = shingled(Tables.load(s, dir, "documents"), "doc_id", "source").cache()
         ngramJaccardPairs(sh, NgramDfCap, 0.2)
           .orderBy("source", "a_id", "b_id")
       },
@@ -2218,12 +2188,7 @@ object TextQueries {
     // either reaches 0.5. Planted near-dups on this corpus sit at ~1.0.
     "ngram_containment_pairs" -> Q(
       fn = (s, dir) => {
-        val sh = Tables.load(s, dir, "documents")
-          .withColumn("toks", split(col("text"), " "))
-          .filter(size(col("toks")) >= 3)
-          .withColumn("shingles", graft.functions.ShingleFunctions.shingleSet(col("toks")))
-          .select("doc_id", "source", "shingles")
-          .cache()
+        val sh = shingled(Tables.load(s, dir, "documents"), "doc_id", "source").cache()
         ngramPairStats(sh, NgramDfCap)
           .withColumn("cont_a", col("n_inter").cast("double") / col("sz_a"))
           .withColumn("cont_b", col("n_inter").cast("double") / col("sz_b"))

@@ -2055,8 +2055,16 @@ object PriorityStreams {
   // ---- FAIR-pool priority scheduling ------------------------------------
 
   /** The Spark-native expression of bucket priority at execution time: a
-    * FAIR pool per bucket with weight = allocation percent, so a 70%-bucket
-    * query gets ~7× the task slots of a 10%-bucket query under contention.
+    * FAIR pool per bucket with weight = allocation percent. Weights bind
+    * only while every pool has tasks pending; a pool with nothing queued
+    * cedes its slots, so the split of task slots follows the weights only
+    * under sustained contention. A query started outside [[inBucketPool]],
+    * such as the router, runs in the `default` pool at weight 1. Two traced
+    * perfbench quickstart runs (seed 1; Platinum 70 / Gold 30; 4-core host)
+    * measured the 70% bucket's task share `hi_share` at 0.46 / 0.49 steady
+    * and 0.49 / 0.49 under overload, and mean task waits in the `default`
+    * pool of 61 / 55 ms steady and 55 / 59 ms under overload, against
+    * 9–26 ms in the bucket pools.
     *
     * Usage: call [[allocationFileXml]] / [[writeAllocationFile]] BEFORE
     * building the session, set `spark.scheduler.mode=FAIR` and

@@ -85,7 +85,7 @@ class BucketLayoutSpec extends AnyFunSuite {
     cuts <- Gen.listOfN(k - 1, Gen.choose(1, 99)).map(_.distinct.sorted)
   } yield {
     val bounds = 0 +: cuts :+ 100
-    val allocs = bounds.sliding(2).map { case List(a, b) => b - a }.filter(_ > 0).toSeq
+    val allocs = bounds.zip(bounds.tail).map { case (a, b) => b - a }.filter(_ > 0)
     BucketPriorityConfig("t", allocs.indices.map(i => s"B$i"), allocs).toOption.get
   }
 

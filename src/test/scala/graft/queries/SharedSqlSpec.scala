@@ -2,10 +2,11 @@ package graft.queries
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One builder per shared oracle sub-plan: the MinHash signature, the
-  * raw-PQ encode and the recall leg are each spelled out once under
+/** One builder per shared sub-plan: the oracle's MinHash signature, raw-PQ
+  * encode, trained residual-PQ encode and recall leg, and the Spark-side
+  * shingle and signature frames, are each spelled out once under
   * `graft/queries`, so an edit to one cannot leave a stale copy behind that
-  * silently disagrees with its Spark twin. */
+  * silently disagrees with its twin. */
 class SharedSqlSpec extends AnyFunSuite {
 
   private val shared = Seq(
@@ -14,7 +15,13 @@ class SharedSqlSpec extends AnyFunSuite {
     "raw-PQ encode CTE" ->
       "vec_id AS cid, j, embedding[j*8+1 : j*8+8] AS subv",
     "recall-leg SQL" ->
-      "LEFT JOIN a_$name a ON e.qid = a.qid AND e.cid = a.cid")
+      "LEFT JOIN a_$name a ON e.qid = a.qid AND e.cid = a.cid",
+    "trained residual-PQ encode SQL" ->
+      "ROW_NUMBER() OVER (PARTITION BY r.cid, r.j",
+    "Spark shingle frame" ->
+      """.withColumn("shingles", graft.functions.ShingleFunctions.shingleSet(col("toks")))""",
+    "Spark signature frame" ->
+      """graft.functions.MinhashFunctions.minhashSignature(col("shingles"))""")
 
   test("shared oracle sub-plans are spelled out once under src/main/scala/graft/queries") {
     val sources = graft.SparkTestBase.scalaSources("src/main/scala/graft/queries")
